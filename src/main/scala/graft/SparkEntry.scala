@@ -11,15 +11,16 @@ import graft.queries._
   */
 object SparkEntry {
 
-  /** Flagship on /root/testdata/sf0.001; driver smoke-checks rows>0.
+  /** Flagship on the sf0.001 testdata; the smoke check needs rows > 0.
     * Runs the ENGINE end-to-end: derives a source table, runs SyncRunner
     * through its full lifecycle (standard first sync → NOOP re-sync →
     * incremental after updates) and returns the per-run report frame.
-    * Falls back to the flagship merge query if the runner path hits an
-    * environment issue (smoke must never false-negative on rows>0). */
-  def entry(spark: SparkSession): DataFrame =
-    try {
-      import spark.implicits._
+    * Fails loudly — no fallback — when any run is not ok or the modes are
+    * not exactly Standard → Noop → Incremental: a smoke check that cannot
+    * fail proves nothing. */
+  def entry(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val reports = {
       val sfDir = "/root/testdata/sf0.001"
       val dir = java.nio.file.Files.createTempDirectory("graft_entry").toString
       val store = new graft.state.SyncStateStore(s"$dir/state.json")
@@ -32,13 +33,19 @@ object SparkEntry {
       graft.sync.SyncFixtures.source(spark, sfDir)
         .write.mode("overwrite").parquet(s"$dir/src")
       val third = runner.runAll(Seq(plan))   // 5% updates ⇒ INCREMENTAL
-      (first ++ second ++ third).map(r =>
+      first ++ second ++ third
+    }
+    reports.find(!_.ok).foreach(r => throw new IllegalStateException(
+      s"entry: ${r.table} (${r.mode}) failed: ${r.error.getOrElse("")}"))
+    val modes = reports.map(_.mode.toString)
+    if (modes != Seq("Standard", "Noop", "Incremental"))
+      throw new IllegalStateException("entry: expected modes Standard, Noop, " +
+        s"Incremental; got ${modes.mkString(", ")}")
+    reports.map(r =>
         (r.table, r.mode.toString, r.ok, r.metrics.modified, r.metrics.newInSource,
           r.metrics.changePercent))
         .toDF("table", "mode", "ok", "modified", "new_in_source", "change_pct")
-    } catch {
-      case _: Throwable => queries("q_m2_incremental")(spark, "/root/testdata/sf0.001")
-    }
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -16,9 +16,11 @@ import org.apache.spark.sql.functions._
   * Scale design (100 TB): every model here is built with one hash
   * aggregation keyed on content (term / shingle / bigram) — map-side
   * partials, even partitioning — and joined back keyed the same way. No
-  * all-pairs joins, no windows over the corpus (the only window is the
-  * per-document top-N rank, bounded by the per-doc vocabulary). The
-  * benchmark side of decontamination is broadcast by construction (held-out
+  * all-pairs joins. Two windows: the per-document top-N rank, bounded by
+  * the per-doc vocabulary, and [[boilerplateScore]]'s per-shingle document
+  * frequency (`Window.partitionBy("shingle")`), whose partition size is
+  * that shingle's document frequency — bounded by the corpus size, and
+  * large exactly for the boilerplate it measures. The benchmark side of decontamination is broadcast by construction (held-out
   * sets are small); the other model tables shuffle-join on their key, the
   * shape that survives arbitrary vocabulary growth.
   *
@@ -73,6 +75,10 @@ object CorpusAnalysis {
     // evaluation (guide §2.4; same r2 measurement as ngramJaccardPairs'
     // hot-shingle cap — shingle keys are mostly unique, so map-side
     // partials buy nothing and the window's sort beats the second shuffle).
+    // Skew: all rows of one shingle land in one WindowExec partition (AQE
+    // splits skewed joins, not windows), and boilerplate shingles are hot by
+    // definition. WindowExec spills per-partition, so a mega-hot shingle
+    // degrades to disk, not OOM.
     val w = Window.partitionBy("shingle")
     units.withColumn("unit_docs", count(lit(1)).over(w))
       .groupBy(col("sid").as("doc_id"))

@@ -140,8 +140,10 @@ final class SyncRunner(
       SyncReport(plan.name, mode, metrics.copy(totalSec = total), ok = true)
     } catch {
       case e: Throwable =>
+        // toString, not getMessage: it names the exception class and is
+        // never null (a message-less exception left Some(null))
         SyncReport(plan.name, SyncMode.Standard, SyncMetrics(), ok = false,
-          error = Some(e.getMessage))
+          error = Some(e.toString))
     }
   }
 

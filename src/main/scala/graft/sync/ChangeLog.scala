@@ -55,6 +55,7 @@ object ChangeLog {
     val next = math.max((commitSeqs(logDir) :+ (minSeq - 1)).max + 1, minSeq)
     val staging = s"$logDir/.tmp-$next"
     Apply.writeChangeSet(cs, staging)
+    writeSchemas(staging, cs.inserts.schema, cs.deleteKeys.schema)
     writeStats(cs.inserts.sparkSession, staging, statsColumns(logDir))
     // commit wall-clock stamp (timestamp-based time travel rides this);
     // parameterized for deterministic tests/oracles
@@ -62,6 +63,63 @@ object ChangeLog {
     if (!LakeFs.rename(staging, s"$logDir/$next"))
       throw new IllegalStateException(s"commit rename failed: $staging -> $logDir/$next")
     next
+  }
+
+  /** Schema sidecar of a lake generation dir: one JSON schema per line. A
+    * commit's holds its inserts schema, then its deletes schema; a base's
+    * holds the base schema. It is written inside the staged dir, before the
+    * commit's rename or the base's pointer swap, so a reader never resolves
+    * a generation whose sidecar is still to come. Opening a generation with
+    * it is pure planning: `spark.read.parquet(dir)` without a schema runs a
+    * schema-inference Spark job on every call. */
+  val SchemaFile = "_schema"
+
+  /** `t` in the form a parquet read returns it: Spark opens file sources
+    * nullable at every depth (array elements, map values, struct fields), so
+    * a recorded `df.schema` must be widened the same way or the replay's
+    * type reconciliation would see `array<float>` change nullability across
+    * generations. */
+  private def asRead(t: types.DataType): types.DataType = t match {
+    case s: types.StructType =>
+      types.StructType(s.fields.map(f =>
+        f.copy(dataType = asRead(f.dataType), nullable = true)))
+    case a: types.ArrayType => types.ArrayType(asRead(a.elementType), true)
+    case m: types.MapType =>
+      types.MapType(asRead(m.keyType), asRead(m.valueType), true)
+    case other => other
+  }
+
+  /** Record `schemas` (the frames just written under `dir`) as its sidecar. */
+  private[sync] def writeSchemas(dir: String, schemas: types.StructType*): Unit =
+    LakeFs.writeUtf8(s"$dir/$SchemaFile",
+      schemas.map(s => asRead(s).json).mkString("\n"))
+
+  /** The `n` schemas of `dir`'s sidecar — None when it is missing (written
+    * before sidecars existed), torn or garbled; the caller then infers. */
+  private def recordedSchemas(dir: String, n: Int): Option[Seq[types.StructType]] =
+    try {
+      val parsed = LakeFs.readUtf8(s"$dir/$SchemaFile").linesIterator
+        .filter(_.nonEmpty).map(types.DataType.fromJson).toSeq
+      val structs = parsed.collect { case st: types.StructType => st }
+      if (structs.size == n && parsed.size == n) Some(structs) else None
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The recorded schema of base generation dir `basePath` — None for a
+    * flat pre-pointer table, a base written before sidecars, or a torn one. */
+  def baseSchema(basePath: String): Option[types.StructType] =
+    recordedSchemas(basePath, 1).map(_.head)
+
+  /** Open parquet `paths` with `schema` when one is recorded, else by
+    * inference (one Spark job). */
+  def open(spark: SparkSession, schema: Option[types.StructType],
+      paths: Seq[String]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(paths: _*)
+
+  /** A commit's (inserts, deletes) frames, opened with its recorded schemas. */
+  def commitFrames(spark: SparkSession, commitPath: String): (DataFrame, DataFrame) = {
+    val rec = recordedSchemas(commitPath, 2)
+    (open(spark, rec.map(_.head), Seq(s"$commitPath/inserts")),
+      open(spark, rec.map(_(1)), Seq(s"$commitPath/deletes")))
   }
 
   /** Wall-clock millis a commit was appended at — None for commits written
@@ -122,9 +180,8 @@ object ChangeLog {
 
   private def writeStats(spark: SparkSession, staging: String,
       extraCols: Seq[String] = Seq.empty): Unit = {
-    val del = spark.read.parquet(s"$staging/deletes")
+    val (ins, del) = commitFrames(spark, staging)
     val keyCol = del.schema.fieldNames.head
-    val ins = spark.read.parquet(s"$staging/inserts")
     // v3: the INSERT rows' version band rides the SAME single pass as the
     // key stats (review r11: a separate ins.agg re-scanned the staged
     // changeset — the double scan the persist below exists to avoid):
@@ -435,17 +492,19 @@ object ChangeLog {
       case _ => paths1
     }
     replayPaths(spark, paths, logDir, keyCol,
-      fromSeq, keyRange, toSeq, typePolicy, versionFrom)
+      fromSeq, keyRange, toSeq, typePolicy, versionFrom, baseSchema(basePath))
   }
 
   /** [[replay]] over an EXPLICIT base file list — the entry partial
-    * compaction uses to fold commits into just the touched files. */
+    * compaction uses to fold commits into just the touched files.
+    * `recordedBase` is the base generation's [[baseSchema]] (None = infer). */
   def replayPaths(spark: SparkSession, basePaths: Seq[String], logDir: String,
       keyCol: String = "RecId", fromSeq: Int = 0,
       keyRange: Option[(Long, Long)] = None,
       toSeq: Int = Int.MaxValue,
       typePolicy: TypePolicy = TypePolicy.Strict,
-      versionFrom: Option[(String, Long)] = None): DataFrame = {
+      versionFrom: Option[(String, Long)] = None,
+      recordedBase: Option[types.StructType] = None): DataFrame = {
     val prune: DataFrame => DataFrame = keyRange match {
       case Some((lo, hi)) => df => df.filter(col(keyCol).between(lo, hi))
       case None => identity
@@ -464,18 +523,21 @@ object ChangeLog {
         }
       case None => identity
     }
-    val base = prune(spark.read.parquet(basePaths: _*))
+    val base = prune(open(spark, recordedBase, basePaths))
     // ALL commits in the pointer's range participate in the SCHEMA (widening
-    // + column set) — schema reads are footer-only metadata, cheap. keyRange
-    // data skipping prunes only the ROW scans below; otherwise a skipped
-    // commit that introduced a column/widening would make readKeyRange's
-    // schema differ from read(...).filter(...) (ADVICE r4).
+    // + column set); their schemas come from the `_schema` sidecars, so this
+    // pass plans no Spark job (a pre-sidecar commit pays two inference jobs).
+    // keyRange data skipping prunes only the ROW scans below; otherwise a
+    // skipped commit that introduced a column/widening would make
+    // readKeyRange's schema differ from read(...).filter(...) (ADVICE r4).
     val allCommits = LakeFs.list(logDir)
       .filter(_.isDirectory)
       .flatMap(st => st.getPath.getName.toIntOption.map(_ -> st.getPath.toString))
       .filter(c => c._1 >= fromSeq && c._1 <= toSeq)
       .sortBy(_._1)
     if (allCommits.isEmpty) return vFilter(base)
+    val frames = allCommits.map { case (seq, path) =>
+      seq -> commitFrames(spark, path) }.toMap
     val commits = allCommits.filter { case (_, path) =>
       keyRange.forall { case (lo, hi) => !skippable(path, lo, hi) } }
 
@@ -492,9 +554,9 @@ object ChangeLog {
     // supertype ([[widen]]: integral chain, float→double, decimal growth —
     // the source-side ALTERs that occur in practice); a non-widenable
     // change still fails loudly rather than guessing.
-    val commitSchemas = allCommits.map { case (_, path) =>
-      (spark.read.parquet(s"$path/inserts").schema,
-        spark.read.parquet(s"$path/deletes").select(keyCol).schema)
+    val commitSchemas = allCommits.map { case (seq, _) =>
+      val (ins, del) = frames(seq)
+      (ins.schema, del.select(keyCol).schema)
     }
     // fields tagged with their generation (base = -1) so LatestWins can
     // resolve a non-widenable change to the NEWEST type in commit order
@@ -541,7 +603,7 @@ object ChangeLog {
       }: _*)
     }
     val insFrames = commits.map { case (seq, path) =>
-      val insAll = spark.read.parquet(s"$path/inserts")
+      val (insAll, delAll) = frames(seq)
       // version skipping (monotonic-version contract, see
       // LakeTable.readVersionFrom): a commit whose insert-version band tops
       // out below the threshold contributes no output rows, and the rows it
@@ -577,8 +639,7 @@ object ChangeLog {
           }
         case None => insAll
       }
-      (seq, prune(ins),
-        prune(spark.read.parquet(s"$path/deletes")).select(keyCol))
+      (seq, prune(ins), prune(delAll).select(keyCol))
     }
     if (insFrames.isEmpty)
       return vFilter(conform(alignTypes(base, widened, lossy)))

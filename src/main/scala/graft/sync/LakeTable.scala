@@ -7,10 +7,20 @@ import org.apache.spark.sql.functions.{col, lit}
   * an atomically-swapped pointer file.
   *
   * ```
-  *   <table>/_current        "<baseDirName>\t<firstLogSeq>"   (the commit point)
-  *   <table>/base-<n>/       parquet snapshot
-  *   <table>/_log/<seq>/     changeset commits (deletes/ + inserts/)
+  *   <table>/_current             "<baseDirName>\t<firstLogSeq>[\t<stateTimeMs>]"
+  *                                (the commit point)
+  *   <table>/base-<n>/            parquet snapshot
+  *   <table>/base-<n>/_schema     the base's schema (ChangeLog.SchemaFile)
+  *   <table>/base-<n>/_manifest   file list of a partially compacted base
+  *                                (ManifestFile; absent = the dir's files)
+  *   <table>/_log/<seq>/          changeset commits (deletes/ + inserts/)
+  *   <table>/_log/<seq>/_stats    key range, bands and version bands
+  *   <table>/_log/<seq>/_ts       wall-clock append stamp (millis)
+  *   <table>/_log/<seq>/_schema   inserts and deletes schemas
   * ```
+  *
+  * Every sidecar is written inside its generation's dir before that dir
+  * becomes visible (commit rename, pointer swap) and is deleted with it.
   *
   * This is the lake-native answer to the reference's transactional apply
   * (D5, CopyOrchestrator.cs:1053-1232): the pointer write is the commit —
@@ -83,8 +93,7 @@ object LakeTable {
 
   /** What a reader should hand to `spark.read.parquet`: the explicit file
     * list for a manifested base (its files may live in several generation
-    * dirs), the dir itself otherwise (preserves Spark's own listing,
-    * including the schema-from-empty-dir error semantics). */
+    * dirs), the dir itself otherwise (preserves Spark's own listing). */
   def readPaths(basePath: String): Seq[String] =
     if (LakeFs.exists(s"$basePath/$ManifestFile")) baseDataFiles(basePath)
     else Seq(basePath)
@@ -424,12 +433,13 @@ object LakeTable {
         val seqs = ChangeLog.commitSeqs(log)
           .filter(q => q >= fromSeq && q <= toSeq).sorted
         if (seqs.isEmpty)
-          spark.read.parquet(readPaths(base): _*).limit(0)
-            .withColumn("_op", lit("")).withColumn("_seq", lit(0))
+          ChangeLog.open(spark, ChangeLog.baseSchema(base), readPaths(base))
+            .limit(0).withColumn("_op", lit("")).withColumn("_seq", lit(0))
         else seqs.map { q =>
-          val ins = spark.read.parquet(s"$log/$q/inserts")
+          val (insAll, delAll) = ChangeLog.commitFrames(spark, s"$log/$q")
+          val ins = insAll
             .withColumn("_op", lit("insert")).withColumn("_seq", lit(q))
-          val del = spark.read.parquet(s"$log/$q/deletes").select(col(keyCol))
+          val del = delAll.select(col(keyCol))
             .withColumn("_op", lit("delete")).withColumn("_seq", lit(q))
           ins.unionByName(del, allowMissingColumns = true)
         }.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -508,6 +518,7 @@ object LakeTable {
       Seq(prev.map(_._2).getOrElse(-1))).max + 1
     val newBase = s"base-$nextSeq"
     df.write.mode("overwrite").parquet(s"$table/$newBase")
+    ChangeLog.writeSchemas(s"$table/$newBase", df.schema)
     commitPointer(table, newBase, nextSeq, stateTimeMs)
     // a plain snapshot write DROPS any recorded layout policy (ADVICE r14):
     // the new base was not laid out by it, and a stale `_layout` would make
@@ -835,14 +846,16 @@ object LakeTable {
     val (touched, untouched) =
       if (touched0.nonEmpty) (touched0, untouched0)
       else (untouched0.take(1), untouched0.drop(1))
+    val recorded = ChangeLog.baseSchema(base)
     val rewritten = ChangeLog.replayPaths(spark, touched.map(_._1), log,
-      keyCol, fromSeq)
+      keyCol, fromSeq, recordedBase = recorded)
     def norm(s: org.apache.spark.sql.types.StructType) =
       s.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
-    // ONE footer suffices: all files of a base share a schema (the invariant
-    // this very guard preserves) — reading every carried file's footer would
-    // put O(all files) metadata IO back into the O(touched) path
-    val baseSchema = spark.read.parquet(files.head).schema
+    // the recorded schema, else ONE footer: all files of a base share a
+    // schema (the invariant this very guard preserves) — reading every
+    // carried file's footer would put O(all files) metadata IO back into
+    // the O(touched) path
+    val baseSchema = ChangeLog.open(spark, recorded, files.take(1)).schema
     if (norm(rewritten.schema) != norm(baseSchema))
       return full("commits changed the schema (new columns or widened types)",
         wasClustered, files.size)
@@ -865,10 +878,12 @@ object LakeTable {
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map(st => s"$newBaseName/${st.getPath.getName}")
     val carried = untouched.map { case (p, _) => fileId(p) }
-    // the manifest is part of the staged generation: written BEFORE the
-    // pointer swap, so a reader can never resolve the new base without it
+    // the manifest and the schema are part of the staged generation: written
+    // BEFORE the pointer swap, so a reader can never resolve the new base
+    // without them
     LakeFs.writeUtf8(s"$newBase/$ManifestFile",
       (newFiles ++ carried).mkString("\n"))
+    ChangeLog.writeSchemas(newBase, rewritten.schema)
     val prev = Some((base, fromSeq))
     commitPointer(table, newBaseName, nextSeq, foldedTime)
     gc(table, keepBase = newBaseName, prev = prev)

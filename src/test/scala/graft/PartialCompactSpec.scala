@@ -479,4 +479,75 @@ class PartialCompactSpec extends AnyFunSuite {
     LakeTable.appendCommit(cs(Seq.empty, Seq((2060L, "x"))), t)
     assert(LakeTable.liveInputBytes(t) > live)
   }
+
+  /** Every base and commit dir of `t` that carries a `_schema` sidecar
+    * records exactly the schema a parquet read of it returns (the current
+    * base and every pending commit must carry one). */
+  private def assertSidecars(t: String): Unit = {
+    import org.apache.spark.sql.types.DataType
+    def recorded(dir: String): Seq[DataType] =
+      LakeFs.readUtf8(s"$dir/${ChangeLog.SchemaFile}").split("\n").toSeq
+        .filter(_.nonEmpty).map(DataType.fromJson)
+    val (current, fromSeq) = LakeTable.resolve(t).get
+    assert(LakeFs.exists(s"$current/${ChangeLog.SchemaFile}"), current)
+    LakeFs.list(t).map(_.getPath.toString)
+      .filter(p => p.split('/').last.startsWith("base-"))
+      .filter(p => LakeFs.exists(s"$p/${ChangeLog.SchemaFile}"))
+      .foreach { b =>
+        assert(recorded(b) ==
+          Seq(spark.read.parquet(LakeTable.readPaths(b): _*).schema), b)
+      }
+    val pending = ChangeLog.commitSeqs(s"$t/_log").filter(_ >= fromSeq)
+    ChangeLog.commitSeqs(s"$t/_log").map(q => s"$t/_log/$q").foreach { c =>
+      if (pending.exists(q => c.endsWith(s"/$q")))
+        assert(LakeFs.exists(s"$c/${ChangeLog.SchemaFile}"), c)
+      assert(recorded(c) == Seq(spark.read.parquet(s"$c/inserts").schema,
+        spark.read.parquet(s"$c/deletes").schema), c)
+    }
+  }
+
+  test("schema sidecars record the schema a read returns, for every base " +
+      "and commit across overwrite, evolving commits, partial/full compaction " +
+      "and a z-ordered overwrite") {
+    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
+    val t = freshTable()
+    // nested array<float> whose elements are non-null in the written frame:
+    // a parquet read returns it containsNull = true, and so must the sidecar
+    def rows(keys: Seq[Long], tag: String) = keys
+      .map(i => (i, i, i.toInt, Seq(i.toFloat, 0.5f), s"$tag$i"))
+      .toDF("RecId", "SysRowVersion", "qty", "emb", "payload")
+    LakeTable.overwriteClustered(rows(1L to 400L, "p"), t, nFiles = 4)
+    assertSidecars(t)
+    // a commit that adds a column, then one that widens qty int → long
+    val added = rows(Seq(390L, 401L), "a").withColumn("extra", lit("x"))
+    LakeTable.appendCommit(Apply.ChangeSet(Seq(5L).toDF("RecId"), added,
+      spark.emptyDataFrame), t)
+    val widened = rows(Seq(395L), "w")
+      .withColumn("qty", col("qty").cast("long")).withColumn("extra", lit("y"))
+    LakeTable.appendCommit(Apply.ChangeSet(Seq.empty[Long].toDF("RecId"),
+      widened, spark.emptyDataFrame), t)
+    assertSidecars(t)
+    // schema change → the full fallback writes the evolved schema
+    assert(LakeTable.compact(spark, t).mode == "full")
+    assertSidecars(t)
+    val evolved = ChangeLog.baseSchema(LakeTable.resolve(t).get._1).get
+    assert(evolved("qty").dataType == LongType)
+    assert(evolved("emb").dataType == ArrayType(FloatType, containsNull = true))
+    assert(evolved.fieldNames.toSeq ==
+      Seq("RecId", "SysRowVersion", "qty", "emb", "payload", "extra"))
+    // a key-local commit in the evolved schema → partial compaction
+    LakeTable.appendCommit(Apply.ChangeSet(Seq(398L).toDF("RecId"),
+      widened.withColumn("RecId", lit(399L)), spark.emptyDataFrame), t)
+    assert(LakeTable.compact(spark, t).mode == "partial")
+    assertSidecars(t)
+    LakeTable.appendCommit(Apply.ChangeSet(Seq(7L).toDF("RecId"),
+      widened.withColumn("RecId", lit(7L)), spark.emptyDataFrame), t)
+    assert(LakeTable.compactFull(spark, t).mode == "full")
+    assertSidecars(t)
+    val before = LakeTable.read(spark, t).collect().toSet
+    LakeTable.overwriteZOrdered(LakeTable.read(spark, t), t,
+      "RecId", "SysRowVersion", nFiles = 4)
+    assertSidecars(t)
+    assert(LakeTable.read(spark, t).collect().toSet == before)
+  }
 }

@@ -289,6 +289,18 @@ class RunnerSpec extends AnyFunSuite {
     assert(retried.map(_.table) == Seq("BAD"))
   }
 
+  test("a failure without a message still reports its exception class") {
+    val (dir, _, runner) = newEnv()
+    val throwing = new graft.run.TableSource {
+      def load(s: org.apache.spark.sql.SparkSession) =
+        throw new IllegalStateException()
+    }
+    val r = runner.runTable(runner.TablePlan("THROWS", "ignored-path",
+      s"$dir/tgt_throws", sourceOverride = Some(throwing)))
+    assert(!r.ok)
+    assert(r.error.exists(_.contains("IllegalStateException")), r.error)
+  }
+
   test("schema evolution through the runner: a column added at the source " +
       "flows through the incremental tier (P1 parity end-to-end)") {
     val (dir, store, runner) = newEnv()
@@ -344,7 +356,7 @@ class EntrySpec extends AnyFunSuite {
 class ChangeLogSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-  import graft.sync.{Apply, ChangeLog}
+  import graft.sync.{Apply, ChangeLog, LakeFs}
 
   test("changeset log replay reconstructs the synced state across commits") {
     val dir = java.nio.file.Files.createTempDirectory("graft_log").toString
@@ -518,6 +530,118 @@ class ChangeLogSpec extends AnyFunSuite {
       r.getLong(0) -> (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
     // "123" converts; "legacy-x" degrades to null (try_cast, not a crash)
     assert(byKey == Map(1L -> Some(123L), 2L -> None, 3L -> Some(777L)))
+  }
+
+  // ---- `_schema` sidecars: lake reads open every generation with its
+  // recorded schema (no inference job); a missing or torn sidecar falls
+  // back to inference with identical results.
+
+  /** A lake table whose base carries a nested `array<float>` column and
+    * which has 3 pending commits: one adds a column, one widens qty
+    * int → long, one deletes and inserts. */
+  private def pendingTable(): String = {
+    val t = java.nio.file.Files.createTempDirectory("graft_sidecar").toString + "/t"
+    def rows(keys: Seq[Long], tag: String) = keys
+      .map(i => (i, i, i.toInt, Seq(i.toFloat, 0.5f), s"$tag$i"))
+      .toDF("RecId", "SysRowVersion", "qty", "emb", "payload")
+    LakeTable.overwrite(rows(1L to 40L, "p"), t)
+    def commit(del: Seq[Long], ins: org.apache.spark.sql.DataFrame, ms: Long) =
+      LakeTable.appendCommit(
+        Apply.ChangeSet(del.toDF("RecId"), ins, spark.emptyDataFrame), t, ms)
+    commit(Seq(3L), rows(Seq(1L), "a").withColumn("SysRowVersion", lit(100L))
+      .withColumn("extra", lit("x")), 1000L)
+    commit(Seq.empty, rows(Seq(2L), "w").withColumn("SysRowVersion", lit(101L))
+      .withColumn("qty", col("qty").cast("long")), 2000L)
+    commit(Seq(5L), rows(Seq(41L), "n").withColumn("SysRowVersion", lit(102L)),
+      3000L)
+    assert(LakeTable.pendingCommits(t) == 3)
+    t
+  }
+
+  private def copyTable(t: String): String = {
+    val dst = java.nio.file.Files.createTempDirectory("graft_sidecar_copy")
+      .toString + "/t"
+    val fs = LakeFs.fs(t)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(t),
+      fs, new org.apache.hadoop.fs.Path(dst), false, LakeFs.hadoopConf)
+    dst
+  }
+
+  private def sidecars(t: String): Seq[String] = {
+    val it = LakeFs.fs(t).listFiles(new org.apache.hadoop.fs.Path(t), true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(_.getName == ChangeLog.SchemaFile).map(_.toString).toSeq
+  }
+
+  /** The three lake reads this spec pins, built (not run) on `t`. */
+  private def reads(t: String): Seq[(String, org.apache.spark.sql.DataFrame)] =
+    Seq("read" -> LakeTable.read(spark, t),
+      "readVersionFrom" -> LakeTable.readVersionFrom(spark, t, 50L),
+      "changes" -> LakeTable.changes(spark, t, 0))
+
+  /** Spark jobs launched on this thread while `body` runs. A fence job run
+    * after it is awaited on the listener bus, which delivers events in
+    * order, so every earlier job start has been counted. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"sidecar-probe-${System.nanoTime}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => counted.incrementAndGet(); ()
+          case Some(g) if g == s"$group-fence" => fence.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "sidecar probe")
+      body
+      sc.setJobGroup(s"$group-fence", "sidecar probe fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      counted.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("building read, readVersionFrom or changes over 3 pending commits " +
+      "launches no Spark job") {
+    val t = pendingTable()
+    assert(jobsDuring(LakeTable.read(spark, t)) == 0)
+    assert(jobsDuring(LakeTable.readVersionFrom(spark, t, 50L)) == 0)
+    assert(jobsDuring(LakeTable.changes(spark, t, 0)) == 0)
+    // the counter is live: without sidecars the read infers each schema once
+    // (1 base + 2 per commit)
+    val stripped = copyTable(t)
+    sidecars(stripped).foreach(LakeFs.delete)
+    assert(jobsDuring(LakeTable.read(spark, stripped)) == 7)
+  }
+
+  test("a missing or torn sidecar falls back to inference: identical rows " +
+      "and schema") {
+    val t = pendingTable()
+    val stripped = copyTable(t)
+    val all = sidecars(stripped)
+    assert(all.size == 4, all) // the base + 3 commits
+    all.foreach(LakeFs.delete)
+    val torn = copyTable(t)
+    val commit = sidecars(torn).filter(_.contains("/_log/")).head
+    val body = LakeFs.readUtf8(commit)
+    LakeFs.writeUtf8(commit, body.take(body.length * 2 / 3))
+    val want = reads(t)
+    for (copy <- Seq(stripped, torn); ((name, got), (_, exp)) <- reads(copy).zip(want)) {
+      assert(got.schema == exp.schema, s"$name on $copy")
+      assert(got.collect().toSet == exp.collect().toSet, s"$name on $copy")
+    }
+    assert(want.head._2.schema("emb").dataType ==
+      org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.FloatType, containsNull = true))
   }
 }
 
