@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sync._
 
@@ -28,7 +28,7 @@ import graft.sync._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.run.Sessions.cpus
     val wall0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - wall0) / 1e9
     // SEMANTICS (since r10/r11 — this is a SOFT target, not a hard cap):
@@ -47,24 +47,10 @@ object Bench {
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1200").toDouble
     var budgetCreditSec = 0.0
     def remaining: Double = budgetSec + budgetCreditSec - elapsed
-    val spark = SparkSession.builder()
-      // local[N, 4]: allow task retries — this box's write-throttled regime
-      // can stall a multi-GB read past parquet's 300 s fetch limit, and the
-      // local-mode default of maxFailures=1 turns one IO stall into a dead
-      // SparkContext (observed). Retries only bound failure detection; they
-      // never run on the timed path of a healthy draw.
-      .master(s"local[$cpus,4]")
-      .config("spark.network.timeout", "600s")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the testdata parquet files are ~20MB — default 128MB maxPartitionBytes
-      // gives ONE scan task and serializes every downstream stage
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.run.Sessions.local(cpus)
+    // the one task listener: byte counters for the structural phases, task
+    // CPU + spill for every timed draw's mechanism decomposition
+    val meter = graft.run.IoMeter.install(spark.sparkContext)
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     // process-CPU twin of `results` (per-query loop + scenario draws):
@@ -136,7 +122,7 @@ object Bench {
     val prevCpus: Option[Int] = prevArtifact.flatMap(s =>
       """"cpus":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt))
     val scalingRun: Boolean =
-      prevCpus.exists(p => scala.util.Try(cpus.toInt).toOption.exists(_ != p))
+      prevCpus.exists(_ != cpus)
     val fullOut =
       if (scalingRun) canonicalOut.stripSuffix(".json") + s"_c$cpus.json"
       else canonicalOut
@@ -440,7 +426,7 @@ object Bench {
     // guessed): per draw we also capture
     //  - GC collection time (JVM-wide): process CPU >> task CPU with GC
     //    taking the gap = allocation/heap-pressure regime, not plan work;
-    //  - task-level executorCpuTime + spill bytes from a SparkListener:
+    //  - task-level executorCpuTime + spill bytes from `meter`:
     //    task CPU itself scaling superlinearly = real per-row compute
     //    growth (writer, contention); spill bytes > 0 = the in-memory →
     //    spill step. Listener events are bus-asynchronous, so the deltas
@@ -451,17 +437,6 @@ object Bench {
       gcBeans.forEach(b => s += math.max(b.getCollectionTime, 0L))
       s
     }
-    val taskCpuNs = new java.util.concurrent.atomic.AtomicLong()
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          taskCpuNs.addAndGet(m.executorCpuTime)
-          spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        }
-      }
-    })
     // user/sys split (graft.run.ProcStat): for an identical plan over
     // identical data the USER component is near-deterministic instruction
     // work, while SYS carries the kernel's IO-path work (page-cache
@@ -493,14 +468,14 @@ object Bench {
     def timeWithCpu(f: => Unit): Double = {
       val c0 = osCpu.getProcessCpuTime
       val g0 = gcMsNow()
-      val tc0 = taskCpuNs.get()
-      val sp0 = spillBytes.get()
+      val tc0 = meter.taskCpuNanos
+      val sp0 = meter.spilledBytes
       val (u0, s0) = procUserSys()
       val t = time(f)
       lastDrawCpuS = (osCpu.getProcessCpuTime - c0) / 1e9
       lastDrawGcS = (gcMsNow() - g0) / 1e3
-      lastDrawTaskCpuS = (taskCpuNs.get() - tc0) / 1e9
-      lastDrawSpillMb = (spillBytes.get() - sp0) / 1e6
+      lastDrawTaskCpuS = (meter.taskCpuNanos - tc0) / 1e9
+      lastDrawSpillMb = (meter.spilledBytes - sp0) / 1e6
       val (u1, s1) = procUserSys()
       lastDrawUserS = u1 - u0
       lastDrawSysS = s1 - s0
@@ -712,7 +687,6 @@ object Bench {
     // The big side is lineitem with ~5% of keys changed; in the sort-merge
     // regime the bloom probe prunes ~95% of the big side BEFORE the
     // exchange, so its shuffle bytes drop ~20x while results stay identical.
-    val meter = graft.run.IoMeter.install(spark.sparkContext)
     def rmRecF(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmRecF))
       f.delete(); ()
@@ -1310,7 +1284,7 @@ object Bench {
     // control scan fragments into hundreds of per-task footer reads
     spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
     val bigBase = SyncFixtures.replicate(SyncFixtures.base(spark, sfDir), copies)
-    val nPart = cpus.toInt
+    val nPart = cpus
     // scn_5pct source: the canonical pure-update 5% drift (BASELINE.md's
     // "5%-change re-sync"; deletes/missing/local-edit shapes are exercised
     // by the oracle-checked q_m2/q_j* queries instead)

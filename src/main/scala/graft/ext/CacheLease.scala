@@ -1,6 +1,8 @@
 package graft.ext
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped registry of the cache entries this library's operators
@@ -21,9 +23,13 @@ import org.apache.spark.storage.StorageLevel
   *    who persisted the frame for a larger composition keeps ownership —
   *    e.g. PQ.pqRecall sharing one prepared frame across training, encoding
   *    and ground truth) and records the lease;
-  *  - [[releaseAll]] unpersists exactly the leased frames — sweep drivers
-  *    call it after materializing each query's result, leaving any
-  *    user-owned cache entries alone.
+  *  - [[localCheckpoint]] checkpoints a frame and leases the checkpoint's
+  *    RDD (iterative operators cut lineage per round; those blocks are not
+  *    CacheManager entries, so without the lease only a driver GC freed
+  *    them);
+  *  - [[releaseAll]] unpersists exactly the leased frames and checkpoints —
+  *    sweep drivers call it after materializing each query's result,
+  *    leaving any user-owned cache entries alone.
   *
   * A STOPPED session's entries are purged on the next acquire/release
   * call (its cache died with the context, so dropping the references is
@@ -35,8 +41,19 @@ import org.apache.spark.storage.StorageLevel
   */
 object CacheLease {
 
+  /** One leased entry: a persisted frame, or a local checkpoint's RDD —
+    * `Dataset.unpersist` never touches a checkpoint, so its RDD is freed
+    * directly. */
+  private sealed trait Lease { def free(): Unit }
+  private final case class Persisted(df: DataFrame) extends Lease {
+    def free(): Unit = { df.unpersist(blocking = false); () }
+  }
+  private final case class Checkpointed(rdd: RDD[_]) extends Lease {
+    def free(): Unit = { rdd.unpersist(blocking = false); () }
+  }
+
   private val leases =
-    new java.util.HashMap[SparkSession, java.util.ArrayList[DataFrame]]()
+    new java.util.HashMap[SparkSession, java.util.ArrayList[Lease]]()
 
   /** Lease count past which [[acquire]] warns (once per multiple): the
     * registry holds STRONG references to leased frames until [[releaseAll]],
@@ -59,19 +76,36 @@ object CacheLease {
     * [[releaseAll]] can reclaim it. Returns whether THIS call persisted
     * (callers that unpersist early only unpersist what they persisted). */
   def acquire(df: DataFrame): Boolean = synchronized {
-    purgeStopped()
     if (df.storageLevel == StorageLevel.NONE) {
       df.persist()
-      val l = leases.computeIfAbsent(df.sparkSession,
-        _ => new java.util.ArrayList[DataFrame]())
-      l.add(df)
-      if (l.size % WarnEvery == 0)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"${l.size} outstanding cache leases for this session — call " +
-            "CacheLease.releaseAll(spark) between units of work, or leased " +
-            "frames (and their plans) accumulate for the session's lifetime")
+      record(df.sparkSession, Persisted(df))
       true
     } else false
+  }
+
+  /** `df.localCheckpoint()` (eager), with the checkpoint's RDD leased so
+    * [[releaseAll]] frees its blocks. A released checkpoint cannot be
+    * recomputed: release only after every frame built on it has been
+    * materialized (the sweep-driver contract above). */
+  def localCheckpoint(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint() // runs a job: outside the registry lock
+    cp.queryExecution.logical match {
+      case r: LogicalRDD => synchronized(record(cp.sparkSession, Checkpointed(r.rdd)))
+      case _ => ()
+    }
+    cp
+  }
+
+  /** Called under `synchronized`. */
+  private def record(spark: SparkSession, lease: Lease): Unit = {
+    purgeStopped()
+    val l = leases.computeIfAbsent(spark, _ => new java.util.ArrayList[Lease]())
+    l.add(lease)
+    if (l.size % WarnEvery == 0)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"${l.size} outstanding cache leases for this session — call " +
+          "CacheLease.releaseAll(spark) between units of work, or leased " +
+          "frames (and their plans) accumulate for the session's lifetime")
   }
 
   /** Outstanding leases for a session (spec/diagnostic surface). */
@@ -89,20 +123,18 @@ object CacheLease {
     * pass the exact frame that was acquired. No-op if not leased. */
   def release(df: DataFrame): Unit = synchronized {
     Option(leases.get(df.sparkSession)).foreach { l =>
-      if (l.remove(df)) df.unpersist(blocking = false)
+      if (l.remove(Persisted(df))) df.unpersist(blocking = false)
       if (l.isEmpty) leases.remove(df.sparkSession)
       ()
     }
   }
 
-  /** Unpersist every frame this library leased for `spark`. Non-blocking,
-    * idempotent; user-persisted frames are untouched. Call between queries
-    * of a sweep, or whenever the results of the leased operators have been
-    * materialized. */
+  /** Unpersist every frame and checkpoint this library leased for `spark`.
+    * Non-blocking, idempotent; user-persisted frames are untouched. Call
+    * between queries of a sweep, or whenever the results of the leased
+    * operators have been materialized. */
   def releaseAll(spark: SparkSession): Unit = synchronized {
     purgeStopped()
-    Option(leases.remove(spark)).foreach { l =>
-      l.forEach { df => df.unpersist(blocking = false); () }
-    }
+    Option(leases.remove(spark)).foreach(_.forEach(_.free()))
   }
 }

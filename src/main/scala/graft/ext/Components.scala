@@ -37,35 +37,31 @@ object Components {
     * round), with the canonical projection persisted through that single
     * materialization so the upstream edge pipeline computes once, not
     * once per union branch. The returned frame is checkpoint-cached
-    * (vertex-sized). */
+    * (vertex-sized). Every checkpoint is leased: [[CacheLease.releaseAll]]
+    * frees them once the result is materialized. */
   def labelPropagate(edges: DataFrame, aCol: String, bCol: String,
       iters: Int): DataFrame = {
     val canon = edges
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .persist()
-    val sym = canon
+    // eager: materializes canon once, truncates lineage
+    val sym = CacheLease.localCheckpoint(canon
       .unionByName(canon.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint() // eager: materializes canon once, truncates lineage
+      .distinct())
     canon.unpersist()
-    var labels = sym.select(col("a").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint()
+    var labels = CacheLease.localCheckpoint(sym.select(col("a").as("id"))
+      .distinct().withColumn("comp", col("id")))
     (1 to iters).foreach { _ =>
       val nbrMin = sym
         .join(labels.select(col("id").as("b"), col("comp")), Seq("b"))
         .groupBy(col("a").as("id"))
         .agg(min(col("comp")).as("nbr_comp"))
-      val next = labels.join(nbrMin, Seq("id"), "left")
+      // localCheckpoint forfeits recomputability (an executor loss fails
+      // the job) — the accepted price of flat per-round plans; use reliable
+      // checkpoint() on a cluster where that trade matters
+      labels = CacheLease.localCheckpoint(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-        .localCheckpoint()
-      // no unpersist: checkpoint blocks are not CacheManager-tracked — the
-      // previous round's blocks are reclaimed when the ContextCleaner GCs
-      // its RDD. localCheckpoint also forfeits recomputability (an executor
-      // loss fails the job) — the accepted price of flat per-round plans;
-      // use reliable checkpoint() on a cluster where that trade matters.
-      labels = next
+          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp")))
     }
     labels
   }
@@ -95,12 +91,15 @@ object Components {
     // 1..N-1 (the classic iterative-Spark analysis blowup — with plain
     // caching the driver-side planning cost grows quadratically and a
     // 20-round contraction stalls before any executor works)
-    var e = edges.select(
+    // (every checkpoint and the vertex frame are leased — see
+    // labelPropagate)
+    var e = CacheLease.localCheckpoint(edges.select(
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("x"),
         least(col(aCol).cast("long"), col(bCol).cast("long")).as("p"))
-      .filter(col("x") =!= col("p")).distinct().localCheckpoint()
+      .filter(col("x") =!= col("p")).distinct())
     val verts = e.select(col("x").as("id"))
-      .union(e.select(col("p").as("id"))).distinct().persist()
+      .union(e.select(col("p").as("id"))).distinct()
+    CacheLease.acquire(verts)
 
     def fingerprint(d: DataFrame): (Long, Long) = {
       // XOR fold: order-independent and overflow-free (a sum would trip
@@ -126,13 +125,11 @@ object Components {
       // their min; u keeps one edge to that min
       val minsS = afterLarge.groupBy("x").agg(min(col("p")).as("m"))
       val j = afterLarge.join(minsS, Seq("x"))
-      val next = j.filter(col("p") =!= col("m"))
+      val next = CacheLease.localCheckpoint(j.filter(col("p") =!= col("m"))
           .select(col("p").as("x"), col("m").as("p"))
         .union(j.select(col("x"), col("m").as("p")))
-        .filter(col("x") =!= col("p")).distinct().localCheckpoint()
+        .filter(col("x") =!= col("p")).distinct())
       val nfp = fingerprint(next)
-      // previous round's checkpoint blocks are ContextCleaner-reclaimed
-      // (see labelPropagate) — an unpersist() here would be a no-op
       e = next
       converged = nfp == fp
       fp = nfp

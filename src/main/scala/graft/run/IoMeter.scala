@@ -4,16 +4,19 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
-/** Task-level I/O accounting (D8 metrics, made cluster-truthful): sums
-  * executor input/output/shuffle bytes across all tasks between snapshots.
-  * This is the evidence for the control-pass bargain — wall-clock on local
-  * NVMe flattens I/O ratios that a WAN or a 1000-executor scan pays in
-  * full, but bytes read/written are scale-invariant.
+/** Task-level accounting (D8 metrics, made cluster-truthful): sums
+  * executor input/output/shuffle bytes, executor CPU time and spilled bytes
+  * across all tasks. The bytes are the evidence for the control-pass
+  * bargain — wall-clock on local NVMe flattens I/O ratios that a WAN or a
+  * 1000-executor scan pays in full, but bytes read/written are
+  * scale-invariant. Task CPU and spill decompose a draw's process CPU.
   */
 final class IoMeter private () extends SparkListener {
   private val read = new AtomicLong
   private val written = new AtomicLong
   private val shuffled = new AtomicLong
+  private val taskCpu = new AtomicLong
+  private val spilled = new AtomicLong
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
     val m = t.taskMetrics
@@ -21,8 +24,18 @@ final class IoMeter private () extends SparkListener {
       read.addAndGet(m.inputMetrics.bytesRead)
       written.addAndGet(m.outputMetrics.bytesWritten)
       shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      taskCpu.addAndGet(m.executorCpuTime)
+      spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
     }
   }
+
+  /** Executor CPU nanoseconds so far — a raw read, no settle-wait: events
+    * are bus-asynchronous, so a delta is ~exact over a multi-second block
+    * and advisory for a sub-second one. */
+  def taskCpuNanos: Long = taskCpu.get
+
+  /** Memory + disk spilled bytes so far (raw, as [[taskCpuNanos]]). */
+  def spilledBytes: Long = spilled.get
 
   final case class Snapshot(readB: Long, writtenB: Long, shuffledB: Long) {
     def -(o: Snapshot): Snapshot =

@@ -45,14 +45,7 @@ final class SyncRunner(
     parallelWorkers: Int = 10, // AppConfiguration.cs:36 default
     truncateThresholdPct: Double = Planner.DefaultTruncateThresholdPct,
     failFast: Boolean = true,
-    compactEvery: Int = 8,
-    // P6 re-filter routing for the general incremental tier: when on, the
-    // KMV/bloom router ([[graft.ext.BloomPrune.autoSemiJoin]]) replaces the
-    // plain semi-join on the delta fetch — the 100 TB regime where the
-    // changed-key set outgrows the broadcast threshold. Results identical
-    // on every route; off by default (AQE broadcast covers small deltas).
-    autoRouteRefilter: Boolean = false,
-    refilterBroadcastMaxKeys: Long = 1L << 20) {
+    compactEvery: Int = 8) {
 
   /** One table's sync unit. The default pair is lake→lake (parquet source,
     * [[LakeTable]] target); `sourceOverride`/`applierOverride` swap in any
@@ -317,8 +310,7 @@ final class SyncRunner(
           // changeSetFromFlags keeps version >= threshold — same inclusive
           // bound a prunable source serves with commit skipping
           val cs = Apply.changeSetFromFlags(
-            wideSource(plan, source, threshold), flags, threshold, k, v,
-            autoRouteRefilter, refilterBroadcastMaxKeys)
+            wideSource(plan, source, threshold), flags, threshold, k, v)
           plan.applier.applyChangeSet(cs, spark, k)
           // mark arithmetic (no target re-read): purge removed every target
           // version > tgtMark, inserts top out at max_insert_cv

@@ -227,24 +227,14 @@ object Apply {
       flags: DataFrame,
       threshold: Long,
       keyCol: String = "RecId",
-      versionCol: String = "SysRowVersion",
-      autoRouteRefilter: Boolean = false,
-      refilterBroadcastMaxKeys: Long = 1L << 20): ChangeSet = {
+      versionCol: String = "SysRowVersion"): ChangeSet = {
     val deleteKeys = flags.filter(col("is_delete")).select(keyCol)
     val insertKeys = flags.filter(col("is_insert")).select(keyCol)
-    val fetched = source
-      .filter(col(versionCol) >= lit(threshold)) // S8 over-fetch, pushed to scan
-    // P6 re-filter. The default semi-join AQE-broadcasts when insertKeys
-    // fits; with autoRouteRefilter the KMV/bloom router takes over for the
-    // regime where the changed-key set outgrows the broadcast threshold at
-    // 100 TB (the key set is GBs but its Bloom filter is MBs — prune the
-    // fetch at scan time, shuffle only ~selectivity of it). Every route is
-    // row-identical (BloomSpec); a wrong estimate costs bytes, never rows.
-    val inserts =
-      if (autoRouteRefilter)
-        graft.ext.BloomPrune.autoSemiJoin(fetched, insertKeys, keyCol, keyCol,
-          broadcastMaxKeys = refilterBroadcastMaxKeys)
-      else fetched.join(insertKeys, Seq(keyCol), "left_semi")
+    // S8 over-fetch (pushed to the scan), then the P6 re-filter: a plain
+    // semi-join, AQE-broadcast when insertKeys fits
+    val inserts = source
+      .filter(col(versionCol) >= lit(threshold))
+      .join(insertKeys, Seq(keyCol), "left_semi")
     ChangeSet(deleteKeys, inserts, flags)
   }
 

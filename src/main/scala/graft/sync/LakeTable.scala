@@ -382,10 +382,8 @@ object LakeTable {
     // pinned: the bloom router's KMV estimate (an eager action), the
     // semi-join key build, and the after-side join each reference `last` —
     // without the pin every reference re-reads the commit slice and
-    // re-runs the per-key window (cache lifecycle per the repo convention:
-    // plan-keyed, sweep drivers clearCache per query)
-    if (last.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      last.persist()
+    // re-runs the per-key window (leased: CacheLease.releaseAll frees it)
+    graft.ext.CacheLease.acquire(last)
     val before = graft.ext.BloomPrune.autoSemiJoin(
       readAt(spark, table, fromSeq, keyCol), last.select(col(keyCol)),
       keyCol, keyCol)
@@ -650,32 +648,13 @@ object LakeTable {
       keyCol: String = "RecId"): CompactResult = {
     val sp = layoutSpec(table).getOrElse(
       throw new IllegalArgumentException(s"no _layout policy on: $table"))
-    // state time = the newest folded commit's stamp, like compact — the
-    // reclustered data is only as new as the last commit it folds
-    val foldedTime = resolveWithTime(table) match {
-      case Some((_, fromSeq, prevTime)) =>
-        (ChangeLog.commitSeqs(logDir(table)).filter(_ >= fromSeq)
-          .flatMap(seq => ChangeLog.commitTime(s"${logDir(table)}/$seq")) ++
-          prevTime).maxOption.getOrElse(System.currentTimeMillis())
-      case None => System.currentTimeMillis()
-    }
-    val foldedSeqs = pendingCommits(table)
-    val cur = read(spark, table, keyCol)
-    // bytes-scaled like every full rewrite (reclusterTarget): per-partition
-    // sort/write work stays bounded however the table grew
-    val n = reclusterTarget(
-      resolve(table).map(r => baseDataFiles(r._1).size).getOrElse(0),
-      liveInputBytes(table))
-    overwriteZOrdered(cur, table, sp.colA, sp.colB, n, foldedTime)
-    CompactResult("full", -1, 0, foldedSeqs, "layout recluster (z-order)")
+    rewriteFull(spark, table, keyCol, ZCurve(sp.colA, sp.colB),
+      "layout recluster (z-order)")
   }
 
-  /** Target bytes per clustered base file (`SPARK_GRAFT_TARGET_FILE_MB`,
-    * default 128 MiB — the usual parquet split size, so one rewritten file
-    * ≈ one downstream scan task). */
-  private def targetFileBytes: Long =
-    sys.env.get("SPARK_GRAFT_TARGET_FILE_MB").flatMap(_.toLongOption)
-      .filter(_ > 0).getOrElse(128L) * (1L << 20)
+  /** Target bytes per re-clustered base file: 128 MiB, the usual parquet
+    * split size, so one rewritten file ≈ one downstream scan task. */
+  private val TargetFileBytes: Long = 128L << 20
 
   /** Bytes-scaled partition count for a full re-clustered rewrite: at
     * least the pre-rewrite file count (pruning granularity never
@@ -686,7 +665,7 @@ object LakeTable {
     * a measured 1.41 scaling exponent on what should be a linear pass. */
   private def reclusterTarget(preFiles: Int, inputBytes: Long): Int =
     math.max(math.max(preFiles, 1),
-      math.ceil(inputBytes.toDouble / targetFileBytes).toInt)
+      math.ceil(inputBytes.toDouble / TargetFileBytes).toInt)
 
   /** Live bytes a full rewrite will re-sort: current base's DATA FILES +
     * pending commits. Manifest-aware by construction — a partially-
@@ -769,35 +748,16 @@ object LakeTable {
     val log = logDir(table)
     val seqs = ChangeLog.commitSeqs(log).filter(_ >= fromSeq).sorted
     if (seqs.isEmpty) return CompactResult("noop", 0, 0, 0)
-    val foldedTime =
-      (seqs.flatMap(seq => ChangeLog.commitTime(s"$log/$seq")) ++ prevTime)
-        .maxOption.getOrElse(System.currentTimeMillis())
+    val stateTime = foldedTime(log, seqs, prevTime)
     // recluster=true PRESERVES a key-clustered layout through the full
     // rewrite: without it, ONE scattered/schema-change fallback would write
     // an unclustered base whose wide overlapping file ranges make every
     // LATER compaction full as well — the O(table) steady state silently
     // returning for good (r8 review finding). Costs the range exchange
-    // only when the base demonstrably WAS clustered. The partition count
-    // is BYTES-SCALED, floored at the pre-rewrite file count (r11: reusing
-    // the pre-rewrite count verbatim pinned per-partition sort/write work
-    // to the table's GROWTH — each fallback partition carried 10x the
-    // bytes at 10x data, the measured superlinear compaction).
-    def full(reason: String, recluster: Boolean = false,
-        nFiles: Int = 0): CompactResult = {
-      val cur = read(spark, table, keyCol)
-      val df =
-        if (recluster) {
-          // manifest-aware: a partially-compacted base's files live across
-          // generation dirs, so size the FILE LIST, not the dir
-          val inputBytes = baseDataFiles(base).map(LakeFs.sizeBytes).sum +
-            seqs.map(q => LakeFs.sizeBytes(s"$log/$q")).sum
-          cur.repartitionByRange(reclusterTarget(nFiles, inputBytes),
-              col(keyCol))
-            .sortWithinPartitions(keyCol)
-        } else cur
-      overwrite(df, table, foldedTime)
-      CompactResult("full", -1, 0, seqs.size, reason)
-    }
+    // only when the base demonstrably WAS clustered.
+    def full(reason: String, recluster: Boolean = false): CompactResult =
+      rewriteFull(spark, table, keyCol,
+        if (recluster) KeyRanges else AsRead, reason)
     if (base == table) return full("flat pre-pointer base")
     // v2 sub-intervals when present: a commit mixing hot-tail updates with
     // a few stragglers covers two narrow bands, not their full-width
@@ -815,14 +775,14 @@ object LakeTable {
       known.lazyZip(known.drop(1)).forall { case ((_, h), (l, _)) => h < l }
     }
     if (stats.exists(_.isEmpty))
-      return full("commit without _stats", wasClustered, files.size)
+      return full("commit without _stats", wasClustered)
     val intervals = stats.flatten.flatten
     if (intervals.isEmpty) {
       // only EMPTY commits pend: advance the pointer past them without
       // touching a byte (the base is already the current state)
       val nextSeq = (ChangeLog.commitSeqs(log) :+ fromSeq).max + 1
       commitPointer(table, base.substring(base.lastIndexOf('/') + 1),
-        nextSeq, foldedTime)
+        nextSeq, stateTime)
       return CompactResult("pointer-only", 0, files.size, seqs.size)
     }
     // name the real cause when NO file carries a usable range (non-INT64
@@ -840,7 +800,7 @@ object LakeTable {
     }
     if (untouched0.isEmpty)
       return full("every base file intersects the commit key ranges",
-        wasClustered, files.size)
+        wasClustered)
     // keep at least one data file in the new dir so the generation is
     // self-describing (schema) even when the commits touch no base file
     val (touched, untouched) =
@@ -858,7 +818,7 @@ object LakeTable {
     val baseSchema = ChangeLog.open(spark, recorded, files.take(1)).schema
     if (norm(rewritten.schema) != norm(baseSchema))
       return full("commits changed the schema (new columns or widened types)",
-        wasClustered, files.size)
+        wasClustered)
     val nextSeq = (ChangeLog.commitSeqs(log) :+ fromSeq).max + 1
     val newBaseName = s"base-$nextSeq"
     val newBase = s"$table/$newBaseName"
@@ -885,7 +845,7 @@ object LakeTable {
       (newFiles ++ carried).mkString("\n"))
     ChangeLog.writeSchemas(newBase, rewritten.schema)
     val prev = Some((base, fromSeq))
-    commitPointer(table, newBaseName, nextSeq, foldedTime)
+    commitPointer(table, newBaseName, nextSeq, stateTime)
     gc(table, keepBase = newBaseName, prev = prev)
     CompactResult("partial", newFiles.size, carried.size, seqs.size)
   }
@@ -893,38 +853,62 @@ object LakeTable {
   /** The unconditional full rewrite: base = current replayed state, then
     * drop the replayed commits. [[compact]]'s fallback shape, kept callable
     * for schedule-driven policies. `recluster = true` writes the
-    * key-range-clustered layout (the `nFiles`-file form of
-    * [[overwriteClustered]], 0 = keep the current base's file count) —
-    * the re-clustering pass that turns a fragmented or never-clustered
-    * base into one partial compaction can prune. */
+    * key-range-clustered layout of [[overwriteClustered]] in at least
+    * `nFiles` files (0 = the current base's file count; more when the
+    * bytes call for it) — the re-clustering pass that turns a fragmented
+    * or never-clustered base into one partial compaction can prune. */
   def compactFull(spark: SparkSession, table: String,
       keyCol: String = "RecId", recluster: Boolean = false,
-      nFiles: Int = 0): CompactResult = {
-    val foldedTime = resolveWithTime(table) match {
-      case Some((_, fromSeq, prevTime)) =>
-        val commitTimes = ChangeLog.commitSeqs(logDir(table)).filter(_ >= fromSeq)
-          .flatMap(seq => ChangeLog.commitTime(s"${logDir(table)}/$seq"))
-        (commitTimes ++ prevTime).maxOption.getOrElse(System.currentTimeMillis())
-      case None => System.currentTimeMillis()
-    }
-    val folded = pendingCommits(table)
+      nFiles: Int = 0): CompactResult =
+    rewriteFull(spark, table, keyCol, if (recluster) KeyRanges else AsRead,
+      "explicit compactFull", nFiles)
+
+  /** How [[rewriteFull]] lays out the new base. */
+  private sealed trait FullLayout
+  private case object AsRead extends FullLayout
+  /** Key-range clustered (the [[overwriteClustered]] layout). */
+  private case object KeyRanges extends FullLayout
+  /** Z-ordered on two columns, refreshing the `_layout` policy. */
+  private final case class ZCurve(colA: String, colB: String) extends FullLayout
+
+  /** The one full rewrite — [[compact]]'s fallback, [[compactFull]] and
+    * [[reclusterZOrdered]]: base := the replayed current state, every
+    * pending commit folded, stamped with the newest folded commit's time.
+    * A clustered layout's file count is BYTES-SCALED ([[reclusterTarget]]
+    * over [[liveInputBytes]]), floored at `minFiles`, else at the current
+    * base's file count (r11: reusing the pre-rewrite count verbatim pinned
+    * per-partition sort/write work to the table's GROWTH — each fallback
+    * partition carried 10x the bytes at 10x data, the measured
+    * superlinear compaction). */
+  private def rewriteFull(spark: SparkSession, table: String, keyCol: String,
+      layout: FullLayout, reason: String, minFiles: Int = 0): CompactResult = {
+    val (base, fromSeq, prevTime) = resolveWithTime(table).getOrElse(
+      throw new IllegalArgumentException(s"lake table does not exist: $table"))
+    val seqs = ChangeLog.commitSeqs(logDir(table)).filter(_ >= fromSeq)
+    val stateTime = foldedTime(logDir(table), seqs, prevTime)
     val cur = read(spark, table, keyCol)
-    val df =
-      if (recluster) {
-        // explicit nFiles is honored as a FLOOR, not verbatim: the bytes
-        // term keeps per-partition work bounded however the table grew.
-        // Input bytes = live base + pending commits ONLY (never the whole
-        // dir: the GC-retained previous generation would double-count and
-        // make the file count depend on compaction HISTORY, not state)
-        val pre = if (nFiles > 0) nFiles
-          else resolve(table).map(r => baseDataFiles(r._1).size).getOrElse(0)
-        cur.repartitionByRange(reclusterTarget(pre, liveInputBytes(table)),
-            col(keyCol))
-          .sortWithinPartitions(keyCol)
-      } else cur
-    overwrite(df, table, foldedTime)
-    CompactResult("full", -1, 0, folded, "explicit compactFull")
+    def nFiles = reclusterTarget(
+      if (minFiles > 0) minFiles else baseDataFiles(base).size,
+      liveInputBytes(table))
+    layout match {
+      case AsRead => overwrite(cur, table, stateTime)
+      case KeyRanges =>
+        overwrite(cur.repartitionByRange(nFiles, col(keyCol))
+          .sortWithinPartitions(keyCol), table, stateTime)
+      case ZCurve(a, b) =>
+        overwriteZOrdered(cur, table, a, b, nFiles, stateTime)
+    }
+    CompactResult("full", -1, 0, seqs.size, reason)
   }
+
+  /** State time of a generation that folds `seqs`: the newest folded
+    * commit's stamp, else the previous base's — NOT "now": the data is only
+    * as new as the last commit, so a later `readAtTimestamp` between that
+    * stamp and the rewrite must still resolve. */
+  private def foldedTime(log: String, seqs: Seq[Int],
+      prevTime: Option[Long]): Long =
+    (seqs.flatMap(seq => ChangeLog.commitTime(s"$log/$seq")) ++ prevTime)
+      .maxOption.getOrElse(System.currentTimeMillis())
 
   /** The commit point: write pointer to a temp file, rename over `_current`
     * (atomic on file:/hdfs:, emulated elsewhere — LakeFs.replace). */

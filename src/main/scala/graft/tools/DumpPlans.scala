@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sync._
 
@@ -10,10 +10,12 @@ import graft.sync._
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.maxMetadataStringLength", "200")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // 4 workers regardless of SPARK_GRAFT_CPUS: shuffle partition counts
+    // print in the plans
+    val spark = graft.run.Sessions.local(4)
+    // PLANS.md elides metadata strings (PushedFilters, file lists) at 200
+    // characters
+    spark.conf.set("spark.sql.maxMetadataStringLength", "200")
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
     val sb = new StringBuilder

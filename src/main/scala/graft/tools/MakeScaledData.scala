@@ -36,14 +36,10 @@ object MakeScaledData {
     val src = args(0)
     val out = args(1)
     val n = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.run.Sessions.local(graft.run.Sessions.cpus)
+    // the committed scaled twins were generated under 32 shuffle
+    // partitions; keep it so a regenerated twin has the same file layout
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     write(spark, src, out, n)
     spark.stop()
   }

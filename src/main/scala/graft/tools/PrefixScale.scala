@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-pair evidence for the prefix-filter dedup join (VERDICT r12 #2):
@@ -42,16 +41,7 @@ object PrefixScale {
             "usage: PrefixScale <sfDir> [thresholdPermille] [--heavysalt N]")
           args(i + 1).toInt
       }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.run.Sessions.local(graft.run.Sessions.cpus)
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     val docs =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sync._
 
@@ -9,24 +8,14 @@ import graft.sync._
 object ScnProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val mpb = sys.env.getOrElse("SPARK_GRAFT_MPB", "134217728")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCN_COPIES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", mpb)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's own session: the profile splits the scenarios Bench times
+    val spark = graft.run.Sessions.local(graft.run.Sessions.cpus)
 
     val tmp = sys.env.getOrElse("SPARK_GRAFT_PROF_DIR",
       java.nio.file.Files.createTempDirectory("graft_prof").toString)
     val bigBase = SyncFixtures.replicate(SyncFixtures.base(spark, sfDir), copies)
-    val nPart = cpus.toInt
+    val nPart = graft.run.Sessions.cpus
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"PROF $label%-28s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r

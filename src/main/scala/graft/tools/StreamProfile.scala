@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Per-micro-batch decomposition of a declared STREAMING query (VERDICT
@@ -19,15 +18,7 @@ object StreamProfile {
     val names =
       if (args.length > 1) args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else Seq("q_stream_assign")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.run.Sessions.local(graft.run.Sessions.cpus)
 
     val progresses =
       scala.collection.mutable.ArrayBuffer.empty[(String, String)]

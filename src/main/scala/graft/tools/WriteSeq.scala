@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: sequence-profile repeated identical multi-GB write+sync
@@ -12,14 +11,10 @@ object WriteSeq {
     val srcPath = sys.env.getOrElse("SPARK_GRAFT_WRITESEQ_SRC",
       "/tmp/graft_scn_cache_v3_6x64_sf0.1/src")
     val iters = sys.env.getOrElse("SPARK_GRAFT_WRITESEQ_ITERS", "5").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.files.maxPartitionBytes", "134217728")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.run.Sessions.local(graft.run.Sessions.cpus)
+    // the write sequence is measured reading its source in 128 MB splits;
+    // the factory's 4 MB would time a different plan
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
     val src = spark.read.parquet(srcPath)
     val out = java.nio.file.Files.createTempDirectory("graft_wseq").toString + "/out"
     def rmRec(f: java.io.File): Unit = {

@@ -47,6 +47,27 @@ class CacheHygieneSpec extends AnyFunSuite {
     assert(cacheEmpty, "releaseAll must reclaim every library-leased entry")
   }
 
+  test("connected components: releaseAll frees the checkpointed rounds and " +
+      "the vertex frame") {
+    spark.catalog.clearCache()
+    CacheLease.releaseAll(spark)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L), (7L, 8L), (8L, 9L))
+      .toDF("x", "y")
+    val bounded = Components.labelPropagate(edges, "x", "y", iters = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val star = Components.starComponents(edges, "x", "y")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(bounded == star && star(3L) == 1L && star(9L) == 7L)
+    assert(sc.getPersistentRDDs.keySet.diff(before).nonEmpty,
+      "the components rounds should have left checkpoint RDDs behind")
+    CacheLease.releaseAll(spark)
+    assert(cacheEmpty, "starComponents' vertex frame must be released")
+    val left = sc.getPersistentRDDs.keySet.diff(before)
+    assert(left.isEmpty, s"checkpoint RDDs survived releaseAll: $left")
+  }
+
   test("releaseAll leaves caller-owned caches untouched") {
     spark.catalog.clearCache()
     val mine = freshVectors().persist() // caller-owned: NOT a lease

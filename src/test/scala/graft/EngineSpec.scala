@@ -9,13 +9,9 @@ import graft.sync._
 /** Shared session for Spark-backed suites (one per JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.maxMetadataStringLength", "2000") // full PushedFilters in plan strings
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.run.Sessions.local(4)
+    // plan-shape specs match on full PushedFilters in plan strings
+    s.conf.set("spark.sql.maxMetadataStringLength", "2000")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -129,6 +129,28 @@ class PartialCompactSpec extends AnyFunSuite {
     assert(state(t) == before - ((990L, "p990")) + ((990L, "v3")))
   }
 
+  test("compact's full fallback and compactFull(recluster) rewrite the same " +
+      "clustered table alike: same file count, same rows") {
+    val a = freshTable()
+    clusteredBase(a, 1000L, files = 8)
+    val touched = (5L to 1000L by 13L).toSeq
+    LakeTable.appendCommit(cs(touched, touched.map(i => (i, "v2"))), a)
+    val b = freshTable()
+    val src = java.nio.file.Paths.get(a)
+    val walk = java.nio.file.Files.walk(src)
+    try walk.forEach { p =>
+      java.nio.file.Files.copy(p, java.nio.file.Paths.get(b).resolve(src.relativize(p)))
+      ()
+    } finally walk.close()
+    val ra = LakeTable.compact(spark, a)
+    assert(ra.mode == "full" && ra.reason.contains("intersects"), ra.toString)
+    LakeTable.compactFull(spark, b, recluster = true)
+    def files(t: String) = LakeTable.baseDataFiles(LakeTable.resolve(t).get._1)
+    assert(files(a).size == files(b).size && files(a).size >= 8)
+    assert(state(a) == state(b))
+    assert(LakeTable.read(spark, a).count() == 1000L)
+  }
+
   test("compactFull(recluster) turns a never-clustered base into one " +
       "partial compaction can prune") {
     val t = freshTable()

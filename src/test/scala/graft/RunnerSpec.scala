@@ -175,39 +175,6 @@ class RunnerSpec extends AnyFunSuite {
     assert(tgt.filter(col("RecId") > 500).count() == 5)
   }
 
-  test("autoRouteRefilter: bloom-routed P6 re-filter yields state identical " +
-      "to the plain semi-join runner (tier-3 inserts + deletes)") {
-    // two runners over identical sources: default semi-join vs the KMV/bloom
-    // router forced past its broadcast threshold (maxKeys=1 ⇒ any real key
-    // set routes bloom). The final lake states must match row-for-row —
-    // routing is a plan decision, never a semantic one.
-    val (dir, store, plainRunner) = newEnv()
-    val bloomRunner = new SyncRunner(spark, store, parallelWorkers = 1,
-      autoRouteRefilter = true, refilterBroadcastMaxKeys = 1L)
-    def drift(name: String): Unit = {
-      val path = s"$dir/src_$name"
-      ((1L to 500L).filterNot(_ % 10 == 0)
-        .map(i => (i, if (i % 7 == 3) i + 50000L else i, s"row$i")) ++
-        (501L to 520L).map(i => (i, i + 1000L, s"new$i")))
-        .toDF("RecId", "SysRowVersion", "payload")
-        .write.mode("overwrite").parquet(path)
-    }
-    for ((name, runner) <- Seq(("rp", plainRunner), ("rb", bloomRunner))) {
-      val src = mkSource(dir, name, identity)
-      def plan = runner.TablePlan(name.toUpperCase, src, s"$dir/tgt_$name")
-      assert(runner.runAll(Seq(plan)).head.mode == SyncMode.Standard)
-      drift(name)
-      val r = runner.runAll(Seq(plan))
-      assert(r.head.ok && r.head.mode == SyncMode.Incremental, r.head.toString)
-    }
-    val plainState = LakeTable.read(spark, s"$dir/tgt_rp")
-      .orderBy("RecId").collect().toSeq
-    val bloomState = LakeTable.read(spark, s"$dir/tgt_rb")
-      .orderBy("RecId").collect().toSeq
-    assert(plainState == bloomState, "bloom route changed the synced state")
-    assert(plainState.size == 470) // 450 kept + 20 new
-  }
-
   test("Source/Applier seam: explicit trait overrides drive the same lifecycle") {
     import graft.run.{LakeApplier, ParquetSource}
     val (dir, store, runner) = newEnv()
