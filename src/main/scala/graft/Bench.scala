@@ -1604,9 +1604,7 @@ object Bench {
     // on its own (it is cheap and stable where the multi-GB apply is not)
     def probeDraw(): Double = time {
       val pr = Planner.probe(ctl(srcT), ctl(perfT), 0L, 0L)
-      val stats = Planner.ChangeStats(pr.sourceWindow, pr.targetCount, pr.changed,
-        missing = 0)
-      require(Planner.decide(stats, hasStoredMarks = true) == graft.model.SyncMode.Truncate)
+      require(Planner.decide(pr.stats) == graft.model.SyncMode.Truncate)
     }
     // plough the runway (untimed result-wise, but its duration SIZES the
     // draw pool): the FIRST multi-GB write after a quiet period pays a ~4x
@@ -1665,7 +1663,7 @@ object Bench {
         if (copies > 1) (copies - 1).toLong * 1000000000000000L
         else mark - mark / 9
       val hot = srcT.filter(col("RecId") >= hotLo)
-      val csLoc = Apply.updateOnlyChangeSet(hot, ctl(hot), mark)
+      val csLoc = Apply.updateOnlyChangeSet(hot, mark)
       (1 to compactK).foreach(_ => LakeTable.appendCommit(csLoc, t))
       osSync()
       val beforeMb = dirMbRec(t)
@@ -1750,7 +1748,7 @@ object Bench {
     val tCompact = {
       val t = s"$tmp/tgt_compact"
       lakeTarget(s"$cache/perf", t)
-      val csCompact = Apply.updateOnlyChangeSet(srcT, ctl(srcT), mark)
+      val csCompact = Apply.updateOnlyChangeSet(srcT, mark)
       (1 to compactK).foreach(_ => LakeTable.appendCommit(csCompact, t))
       osSync()
       val compactReadMb = dirMbRec(t)

@@ -91,9 +91,8 @@ object Bpe {
     require(nMerges >= 1, "nMerges must be >= 1")
     // word types are a small frame (vocabulary-bounded): cut the corpus
     // lineage once so the k rounds re-plan only the type table
-    var words = wordCounts(df, textCol)
-      .select(wrap(col("word")).as("w"), col("wcount"))
-      .localCheckpoint()
+    var words = CacheLease.localCheckpoint(wordCounts(df, textCol)
+      .select(wrap(col("word")).as("w"), col("wcount")))
     val out = scala.collection.mutable.ArrayBuffer[Merge]()
     var r = 1
     var done = false
@@ -112,7 +111,7 @@ object Bpe {
           col("wcount"))
         // the per-round replace is one narrow projection; checkpoint
         // occasionally so a deep vocabulary training stays plan-cheap
-        if (r % 16 == 0) words = words.localCheckpoint()
+        if (r % 16 == 0) words = CacheLease.localCheckpoint(words)
         r += 1
       }
     }

@@ -356,7 +356,8 @@ object Dedup {
     * aggregates — measured in PLANS.md before the fix); cached it
     * materializes once and is candidate-sized, i.e. tiny next to the
     * corpus. Cache lifecycle follows the [[Similarity]] convention:
-    * plan-keyed, sweep drivers clearCache() per query. */
+    * plan-keyed and leased, sweep drivers call [[CacheLease.releaseAll]]
+    * per query. */
   def minhashLshPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.5, maxShingleFreq: Long = 1000): DataFrame = {
@@ -367,10 +368,10 @@ object Dedup {
     // Persisted: the band self-join references it from both sides, and
     // without the cache each side re-runs the corpus-wide aggregation
     // (one slim row per doc — cheap to hold; same lifecycle as cand below).
-    // ensureCached: a composed query (editverify, contam) may already hold
+    // acquire: a composed query (editverify, contam) may already hold
     // an identical cached plan — re-persisting would only WARN-spam
     val sig = minhashSignaturesSketch(sh)
-    KMeans.ensureCached(sig)
+    CacheLease.acquire(sig)
     val rowsPerBand = MinhashA.size / MinhashBands
     val bandCols = (0 until MinhashBands).map { bnd =>
       val sigExpr = concat_ws("_",
@@ -382,7 +383,7 @@ object Dedup {
     val cand = bands.as("x").join(bands.as("y"), Seq("band", "bsig"))
       .filter(col("x.sid") < col("y.sid"))
       .select(col("x.sid").as("id_a"), col("y.sid").as("id_b")).distinct()
-    KMeans.ensureCached(cand)
+    CacheLease.acquire(cand)
 
     jaccardVerifyPairs(shArr, cand, threshold, maxShingleFreq)
   }
@@ -416,7 +417,7 @@ object Dedup {
     val candIds = cand.select(col("id_a").as("sid"))
       .union(cand.select(col("id_b").as("sid"))).distinct()
     val candSh = capped.join(candIds, Seq("sid"), "left_semi")
-    KMeans.ensureCached(candSh)
+    CacheLease.acquire(candSh)
     val a = candSh.join(cand.select(col("id_a").as("sid")).distinct(), Seq("sid"), "left_semi")
       .select(col("sid").as("id_a"), col("shingle"), col("nsh").as("na"))
     val b = candSh.join(cand.select(col("id_b").as("sid")).distinct(), Seq("sid"), "left_semi")
@@ -453,11 +454,11 @@ object Dedup {
       idCol: String, textCol: String, n: Int = 3, threshold: Double = 0.5,
       maxShingleFreq: Long = 1000, cacheIndex: Boolean = true): DataFrame = {
     val bands = bandIndex.select(col(idCol).as("sid"), col("band"), col("bsig"))
-    if (cacheIndex) KMeans.ensureCached(bands)
+    if (cacheIndex) CacheLease.acquire(bands)
     val cand = bands.as("x").join(bands.as("y"), Seq("band", "bsig"))
       .filter(col("x.sid") < col("y.sid"))
       .select(col("x.sid").as("id_a"), col("y.sid").as("id_b")).distinct()
-    KMeans.ensureCached(cand)
+    CacheLease.acquire(cand)
     jaccardVerifyPairs(shingleArrays(df, idCol, textCol, n), cand,
       threshold, maxShingleFreq)
   }
@@ -1108,8 +1109,8 @@ object Dedup {
     val cand = prefixCandidates(prefix, thresholdPermille)
     // cand feeds the id restriction AND both verify joins — persist so the
     // prefix pipeline runs once (same lifecycle convention as minhash:
-    // plan-keyed, sweep drivers clearCache per query)
-    KMeans.ensureCached(cand)
+    // plan-keyed and leased, sweep drivers call releaseAll per query)
+    CacheLease.acquire(cand)
     // per-pair verify: distinct TRUE-shingle arrays for CANDIDATE docs
     // only (the r5 minhash lesson — never run the corpus-wide heavy agg
     // when the verify set is candidate-sized), id-keyed joins only.

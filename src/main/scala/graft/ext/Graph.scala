@@ -37,8 +37,10 @@ object Graph {
     * iterations the inputs and every k-th label frame are LOCAL-CHECKPOINTED
     * (the [[Components.labelPropagate]] cure — flat per-round plans at the
     * cost of recomputability: an executor loss fails the job; use reliable
-    * checkpoint() on a cluster where that trade matters). Shallow ranking
-    * runs (iters ≤ checkpointEvery) keep the fully-lazy plan.
+    * checkpoint() on a cluster where that trade matters). The checkpoints
+    * are leased: [[CacheLease.releaseAll]] frees them once the result is
+    * materialized. Shallow ranking runs (iters ≤ checkpointEvery) keep the
+    * fully-lazy plan.
     *
     * @return (vid, pr_micros). */
   def pagerankMicros(edges: DataFrame, iters: Int = 3,
@@ -49,12 +51,12 @@ object Graph {
     require(checkpointEvery >= 1)
     val deep = iters > checkpointEvery
     val e0 = edges.select(col("src"), col("dst"))
-    val e = if (deep) e0.localCheckpoint() else e0
+    val e = if (deep) CacheLease.localCheckpoint(e0) else e0
     val outdeg0 = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val outdeg = if (deep) outdeg0.localCheckpoint() else outdeg0
+    val outdeg = if (deep) CacheLease.localCheckpoint(outdeg0) else outdeg0
     val verts0 = e.select(col("src").as("vid"))
       .union(e.select(col("dst").as("vid"))).distinct()
-    val verts = if (deep) verts0.localCheckpoint() else verts0
+    val verts = if (deep) CacheLease.localCheckpoint(verts0) else verts0
     val teleport = (1000L - dampingPermille) * 1000000L / 1000L
     // |V| IN-PLAN as a broadcast scalar aggregate (like dsum below): the
     // function stays fully lazy — the previous eager verts.count() at
@@ -84,10 +86,10 @@ object Graph {
           withC.select(col("vid"),
             (lit(teleport) +
               expr(s"($dampingPermille * coalesce(cs, 0L)) div 1000")).as("pr"))
-      // checkpoint blocks of the superseded frame are ContextCleaner-
-      // reclaimed (see Components.labelPropagate)
+      // every checkpoint is leased: CacheLease.releaseAll frees its blocks
+      // once the caller has materialized the result
       pr = if (deep && round % checkpointEvery == 0 && round < iters)
-        next.localCheckpoint()
+        CacheLease.localCheckpoint(next)
       else next
     }
     pr.select(col("vid"), col("pr").as("pr_micros"))

@@ -25,15 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object KMeans {
 
-  /** Persist `df` only if nothing cached it yet; returns whether THIS call
-    * took ownership (callers unpersist only what they persisted, so an
-    * outer scope that cached the frame for a larger composition — e.g.
-    * [[PQ.pqRecall]] sharing one prepared frame across training, encoding
-    * and ground truth — keeps its cache). Persists are LEASED through
-    * [[CacheLease]] so sweep drivers reclaim them precisely
-    * (CacheLease.releaseAll) instead of leaking until a clearCache(). */
-  private[ext] def ensureCached(df: DataFrame): Boolean = CacheLease.acquire(df)
-
   private[ext] def withQq(prepared: DataFrame, idCol: String): DataFrame =
     prepared.select(col(idCol), col("qe"))
       .withColumn("qq", expr("array_dot_long(qe, qe)"))
@@ -126,7 +117,7 @@ object KMeans {
     * @return (idCol, cluster) assignment after `iters` Lloyd iterations. */
   def assign(prepared: DataFrame, k: Int, iters: Int, dim: Int = 64,
       idCol: String = "vec_id"): DataFrame = {
-    ensureCached(prepared) // shared by the Lloyd loop AND the final assignment
+    CacheLease.acquire(prepared) // shared by the Lloyd loop AND the final assignment
     assignmentUnder(prepared, lloyd(prepared, k, iters, dim, idCol),
       idCol).select(col(idCol), col("cluster"))
   }

@@ -41,7 +41,7 @@ object PQ {
     // it once so the m·(1+iters) training actions re-derive slices from
     // memory, not from the source scan. Ownership-guarded: when an outer
     // composition (encode/adcTopK/pqRecall) already cached it, keep theirs.
-    val mine = KMeans.ensureCached(prepared)
+    val mine = CacheLease.acquire(prepared)
     val sub = dim / m
     val books = (0 until m).map(s =>
       KMeans.lloyd(sliceFrame(prepared, s, sub, idCol), ksub, iters, sub, idCol))
@@ -55,7 +55,7 @@ object PQ {
     // cached for training AND the m encode branches below (the returned
     // frame keeps the reference; the context cleaner reaps the metadata-
     // sized cache once it becomes unreachable)
-    KMeans.ensureCached(prepared)
+    CacheLease.acquire(prepared)
     encodeUnder(prepared, trainCodebooks(prepared, m, ksub, iters, dim, idCol),
       dim, idCol)
   }
@@ -109,7 +109,7 @@ object PQ {
   def adcTopK(prepared: DataFrame, m: Int, ksub: Int, iters: Int, k: Int,
       sampleMod: Int, dim: Int = Similarity.DefaultDim,
       idCol: String = "vec_id"): DataFrame = {
-    KMeans.ensureCached(prepared) // training + encode + LUT all slice it
+    CacheLease.acquire(prepared) // training + encode + LUT all slice it
     val codebooks = trainCodebooks(prepared, m, ksub, iters, dim, idCol)
     val codes = codesLong(encodeUnder(prepared, codebooks, dim, idCol), m, idCol)
     val lut = queryLut(prepared, codebooks, sampleMod, dim, idCol)
@@ -143,7 +143,7 @@ object PQ {
       ksub: Int, iters: Int, k: Int, sampleMod: Int,
       dim: Int = Similarity.DefaultDim, idCol: String = "vec_id"): DataFrame = {
     val spark = prepared.sparkSession
-    KMeans.ensureCached(prepared) // coarse + m subspace trainings + LUT
+    CacheLease.acquire(prepared) // coarse + m subspace trainings + LUT
     val coarse = KMeans.lloyd(prepared, kCoarse, iters, dim, idCol)
     // inverted lists: every corpus vector's nearest coarse centroid
     val lists = KMeans.assignmentUnder(prepared, coarse, idCol)
@@ -197,7 +197,7 @@ object PQ {
   def pqRecall(prepared: DataFrame, m: Int, ksub: Int, iters: Int, k: Int,
       sampleMod: Int, dim: Int = Similarity.DefaultDim,
       idCol: String = "vec_id"): DataFrame = {
-    KMeans.ensureCached(prepared) // shared by truth, training, ADC
+    CacheLease.acquire(prepared) // shared by truth, training, ADC
     val truth = l2TopK(prepared, k, sampleMod, idCol)
       .select("query_id", "neighbor_id")
     val approx = adcTopK(prepared, m, ksub, iters, k, sampleMod, dim, idCol)
@@ -260,7 +260,7 @@ object PQ {
   def adcRerankTopK(prepared: DataFrame, m: Int, ksub: Int, iters: Int,
       k: Int, candK: Int, sampleMod: Int, dim: Int = Similarity.DefaultDim,
       idCol: String = "vec_id"): DataFrame = {
-    KMeans.ensureCached(prepared)
+    CacheLease.acquire(prepared)
     exactRerank(prepared,
       adcTopK(prepared, m, ksub, iters, candK, sampleMod, dim, idCol),
       k, sampleMod, idCol)
@@ -273,7 +273,7 @@ object PQ {
   def ivfAdcRerankTopK(prepared: DataFrame, kCoarse: Int, nProbe: Int,
       m: Int, ksub: Int, iters: Int, k: Int, candK: Int, sampleMod: Int,
       dim: Int = Similarity.DefaultDim, idCol: String = "vec_id"): DataFrame = {
-    KMeans.ensureCached(prepared)
+    CacheLease.acquire(prepared)
     exactRerank(prepared,
       ivfAdcTopK(prepared, kCoarse, nProbe, m, ksub, iters, candK, sampleMod,
         dim, idCol),
@@ -286,7 +286,7 @@ object PQ {
   def ivfRerankRecall(prepared: DataFrame, kCoarse: Int, nProbe: Int,
       m: Int, ksub: Int, iters: Int, k: Int, candK: Int, sampleMod: Int,
       dim: Int = Similarity.DefaultDim, idCol: String = "vec_id"): DataFrame = {
-    KMeans.ensureCached(prepared)
+    CacheLease.acquire(prepared)
     recallVsL2(prepared,
       ivfAdcRerankTopK(prepared, kCoarse, nProbe, m, ksub, iters, k, candK,
         sampleMod, dim, idCol),
@@ -299,7 +299,7 @@ object PQ {
   def rerankRecall(prepared: DataFrame, m: Int, ksub: Int, iters: Int,
       k: Int, candK: Int, sampleMod: Int, dim: Int = Similarity.DefaultDim,
       idCol: String = "vec_id"): DataFrame = {
-    KMeans.ensureCached(prepared)
+    CacheLease.acquire(prepared)
     val truth = l2TopK(prepared, k, sampleMod, idCol)
       .select("query_id", "neighbor_id")
     val approx = adcRerankTopK(prepared, m, ksub, iters, k, candK, sampleMod,
@@ -338,7 +338,7 @@ object PQ {
       dim: Int = Similarity.DefaultDim, idCol: String = "vec_id"): DataFrame = {
     val spark = prepared.sparkSession
     val sub = dim / m
-    KMeans.ensureCached(prepared)
+    CacheLease.acquire(prepared)
     val coarse = KMeans.lloyd(prepared, kCoarse, iters, dim, idCol)
     val cdf = KMeans.centroidDf(spark, coarse) // (cluster, c, cc)
     // corpus residuals against the assigned cell
@@ -346,7 +346,7 @@ object PQ {
       .join(broadcast(cdf.select("cluster", "c")), Seq("cluster"))
       .select(col(idCol), col("cluster"),
         expr("zip_with(qe, c, (a, b) -> a - b)").as("qe"))
-    KMeans.ensureCached(resid) // m trainings + the encode slice it
+    CacheLease.acquire(resid) // m trainings + the encode slice it
     val codebooks = trainCodebooks(resid.select(col(idCol), col("qe")),
       m, ksub, iters, dim, idCol)
     val codes = codesLong(encodeUnder(resid, codebooks, dim, idCol), m, idCol)
@@ -386,7 +386,7 @@ object PQ {
   def ivfResidualRecall(prepared: DataFrame, kCoarse: Int, nProbe: Int,
       m: Int, ksub: Int, iters: Int, k: Int, sampleMod: Int,
       dim: Int = Similarity.DefaultDim, idCol: String = "vec_id"): DataFrame = {
-    KMeans.ensureCached(prepared)
+    CacheLease.acquire(prepared)
     recallVsL2(prepared,
       ivfResidualAdcTopK(prepared, kCoarse, nProbe, m, ksub, iters, k,
         sampleMod, dim, idCol),
@@ -431,7 +431,7 @@ object PQ {
   def ivfPqRecall(prepared: DataFrame, kCoarse: Int, nProbe: Int, m: Int,
       ksub: Int, iters: Int, k: Int, sampleMod: Int,
       dim: Int = Similarity.DefaultDim, idCol: String = "vec_id"): DataFrame = {
-    KMeans.ensureCached(prepared) // shared by truth, coarse, training, ADC
+    CacheLease.acquire(prepared) // shared by truth, coarse, training, ADC
     val truth = l2TopK(prepared, k, sampleMod, idCol)
       .select("query_id", "neighbor_id")
     val approx = ivfAdcTopK(prepared, kCoarse, nProbe, m, ksub, iters, k,

@@ -120,8 +120,8 @@ object Perceptron {
     require(featureCols.nonEmpty && rounds >= 1, "features and rounds >= 1")
     // materialize the (small-width) feature frame once: k rounds re-scan
     // the projected features, never the corpus derivation above them
-    val f = feats.select((labelCol +: featureCols).map(col): _*)
-      .localCheckpoint()
+    val f = CacheLease.localCheckpoint(
+      feats.select((labelCol +: featureCols).map(col): _*))
     // Overflow is a CONTRACT violation, not a numeric detail: weights
     // accumulate unboundedly on non-separable data, and the in-plan dot
     // product multiplies them by raw Long features — a silent Long wrap

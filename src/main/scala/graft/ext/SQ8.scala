@@ -70,7 +70,7 @@ object SQ8 {
   def sq8TopK(prepared: DataFrame, k: Int, sampleMod: Int,
       dim: Int = Similarity.DefaultDim, idCol: String = "vec_id"): DataFrame = {
     graft.functions.GraftFunctions.register(prepared.sparkSession)
-    KMeans.ensureCached(prepared) // stats action + corpus decode + query side
+    CacheLease.acquire(prepared) // stats action + corpus decode + query side
     val (mn, mx) = dimStats(prepared, dim)
     val corpus = decodeUnder(encodeUnder(prepared, mn, mx), mn, mx)
       .select(col(idCol).as("neighbor_id"), col("dq"))
@@ -90,7 +90,7 @@ object SQ8 {
     * without emitting dim columns (sum/min/max + h32 of the joined codes). */
   def encodeChecks(prepared: DataFrame, dim: Int = Similarity.DefaultDim,
       idCol: String = "vec_id"): DataFrame = {
-    KMeans.ensureCached(prepared) // stats action, then the encode scan
+    CacheLease.acquire(prepared) // stats action, then the encode scan
     val (mn, mx) = dimStats(prepared, dim)
     encodeUnder(prepared, mn, mx)
       .select(col(idCol),
@@ -108,7 +108,7 @@ object SQ8 {
   def sq8Recall(prepared: DataFrame, k: Int, sampleMod: Int,
       dim: Int = Similarity.DefaultDim, idCol: String = "vec_id"): DataFrame = {
     graft.functions.GraftFunctions.register(prepared.sparkSession)
-    KMeans.ensureCached(prepared) // truth pairs + sq8TopK share it
+    CacheLease.acquire(prepared) // truth pairs + sq8TopK share it
     val vecs = prepared.select(col(idCol), col("qe"))
     val truthPairs = broadcast(vecs.filter(col(idCol) % sampleMod === 0)).as("x")
       .join(vecs.as("y"), col(s"x.$idCol") =!= col(s"y.$idCol"))

@@ -43,7 +43,7 @@ object Sharding {
                 else df.sparkSession.sessionState.conf.numShufflePartitions
     val ranged = df.repartitionByRange(parts, orderCols: _*)
       .withColumn("_pid", spark_partition_id())
-    KMeans.ensureCached(ranged)
+    CacheLease.acquire(ranged)
     // numPartitions rows to the driver — the broadcast-offset pass
     val counts = ranged.groupBy("_pid").agg(count(lit(1)).as("_c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)

@@ -214,10 +214,10 @@ object Similarity {
       threshold: Double, dim: Int = 64, idCol: String = "vec_id"): DataFrame = {
     // shared: Lloyd loop + pair scan + output. Not unpersisted here — the
     // returned frame is lazy, so the cache must outlive this call — but the
-    // persist is LEASED (CacheLease.acquire via ensureCached): sweep drivers
+    // persist is LEASED (CacheLease.acquire): sweep drivers
     // reclaim it with CacheLease.releaseAll after materializing, so nothing
     // orphans across a query family (VERDICT r6 #3).
-    KMeans.ensureCached(prepared)
+    CacheLease.acquire(prepared)
     val withC = prepared.join(
       KMeans.assign(prepared, k, iters, dim, idCol), Seq(idCol))
     val dropped = withC.as("x").join(withC.as("y"),
@@ -247,8 +247,8 @@ object Similarity {
     // Lloyd loop + assignment + ε-scan; lifecycle as in semanticDedup
     // (lazy result ⇒ cache outlives the call; leased for
     // CacheLease.releaseAll reclamation after materialization)
-    KMeans.ensureCached(corpusPrepared)
-    KMeans.ensureCached(newPrepared)
+    CacheLease.acquire(corpusPrepared)
+    CacheLease.acquire(newPrepared)
     val cs = KMeans.lloyd(corpusPrepared, k, iters, dim, idCol)
     // per-row assignment expression — no id-keyed self-join to re-attach
     // the cluster (guide §2.4)

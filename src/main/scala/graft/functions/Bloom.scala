@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * results. (Same idea as Spark's runtime bloom-filter injection, but
   * explicit, deterministic, and available to the sync planner's own
   * fetch paths; cf. `Extract.deltaFetch` + the missing-key semi-join in
-  * `Apply.incrementalChangeSet`.)
+  * `Apply.changeSet`.)
   *
   * Hashing: double hashing over splitmix64 finalizers of the LongType key
   * (`pos_i = (h1 + i·h2) mod bits`); build aggregate and probe expression

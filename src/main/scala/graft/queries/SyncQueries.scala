@@ -25,6 +25,16 @@ object SyncQueries {
   private def mark(spark: SparkSession, dir: String): Long =
     SyncFixtures.storedMark(spark, dir).head().getLong(0)
 
+  /** The runner's tier-3 changeset over the fixture pair (source window vs
+    * target, both marks at the stored mark), threshold kept in-plan. */
+  private def m2ChangeSet(spark: SparkSession, dir: String,
+      src: DataFrame, tgt: DataFrame): Apply.ChangeSet = {
+    val m = lit(mark(spark, dir))
+    val flags = Apply.incrementalFlags(
+      SyncFixtures.control(SyncFixtures.source(spark, dir)), tgt, m, m)
+    Apply.changeSet(src, flags, Apply.fetchThreshold(flags, m))
+  }
+
   /** Shared documents-lake fixture for the bm25 maintenance family (ONE
     * copy — q_cdf_maintain_bm25 and q_bm25_maintained_serve replay the
     * same state or their oracles silently diverge): initial = documents
@@ -241,13 +251,11 @@ object SyncQueries {
     // delta commit + log replay (LakeTable) must converge to the same state
     // as the in-memory merge — the lake-format round trip, oracle-checked
     "q_lake_replay" -> ((s, d) => {
-      val m = mark(s, d)
       val dir = java.nio.file.Files.createTempDirectory("graft_lake_q").toString + "/t"
       val src = slim(SyncFixtures.source(s, d))
       val tgt = slim(SyncFixtures.target(s, d))
       LakeTable.overwrite(tgt, dir)
-      val cs = Apply.incrementalChangeSet(
-        src, SyncFixtures.control(SyncFixtures.source(s, d)), tgt, m, m)
+      val cs = m2ChangeSet(s, d, src, tgt)
       LakeTable.appendCommit(cs, dir)
       LakeTable.read(s, dir)
     }),
@@ -281,13 +289,11 @@ object SyncQueries {
     // oracle) — a cut that wrongly includes the later tombstones loses the
     // band and fails the hash
     "q_lake_asof_ts" -> ((s, d) => {
-      val m = mark(s, d)
       val dir = java.nio.file.Files.createTempDirectory("graft_lake_q").toString + "/t"
       val src = slim(SyncFixtures.source(s, d))
       val tgt = slim(SyncFixtures.target(s, d))
       LakeTable.overwrite(tgt, dir, stateTimeMs = 500L)
-      val cs = Apply.incrementalChangeSet(
-        src, SyncFixtures.control(SyncFixtures.source(s, d)), tgt, m, m)
+      val cs = m2ChangeSet(s, d, src, tgt)
       LakeTable.appendCommit(cs, dir, nowMs = 1000L)
       val delBand = src
         .filter(col("RecId").between(SyncFixtures.SkipLo, SyncFixtures.SkipHi))
@@ -718,13 +724,11 @@ object SyncQueries {
     // every surviving parquet scan, and the result is provably the plain
     // replay filtered (which is exactly what the oracle states)
     "q_lake_skip" -> ((s, d) => {
-      val m = mark(s, d)
       val dir = java.nio.file.Files.createTempDirectory("graft_lake_q").toString + "/t"
       val src = slim(SyncFixtures.source(s, d))
       val tgt = slim(SyncFixtures.target(s, d))
       LakeTable.overwrite(tgt, dir)
-      val cs = Apply.incrementalChangeSet(
-        src, SyncFixtures.control(SyncFixtures.source(s, d)), tgt, m, m)
+      val cs = m2ChangeSet(s, d, src, tgt)
       LakeTable.appendCommit(cs, dir)
       LakeTable.readKeyRange(s, dir, SyncFixtures.SkipLo, SyncFixtures.SkipHi)
     }),

@@ -178,6 +178,17 @@ final class SyncRunner(
     }
   }
 
+  /** What a delta tier hands the one mode match: the cost-model stats, the
+    * values the mark save needs — control max version, max version among
+    * the rows an Incremental apply would insert, control max key — and the
+    * changeset to apply if the mode is INCREMENTAL. */
+  private final class TierPlan(
+      val stats: Planner.ChangeStats,
+      val maxCv: Long,
+      val maxInsertCv: Long,
+      val maxKey: Option[Long],
+      val changeSet: () => Apply.ChangeSet)
+
   /** O4/O5/O6: control-pass-first routing, three tiers by drift shape:
     *
     *  1. perfect sync (pair checksums match)          → NOOP, zero work
@@ -191,7 +202,9 @@ final class SyncRunner(
     * Tiers 1-2 cover the steady-state cadence a sync tool actually runs at
     * (nothing changed / rows changed in place); tier 3 is the general case
     * and the only one that pays a key-set shuffle. All three are decided by
-    * ONE two-scan probe over ~16 B/row control columns. */
+    * ONE two-scan probe over ~16 B/row control columns. Tiers 2 and 3 only
+    * produce a [[TierPlan]]; one [[Planner.decide]] match over it holds one
+    * arm per mode. */
   private def syncOptimized(
       plan: TablePlan, source: DataFrame,
       srcMark: Long, tgtMark: Long): (SyncMode, SyncMetrics) = {
@@ -206,121 +219,84 @@ final class SyncRunner(
     // replay upserts by key, and any row that advances mid-run lands with
     // a version above the stored mark, so the next run reconciles it.
     val control = windowed(source, plan).select(k, v).persist()
-    try syncOptimizedPinned(plan, source, control, srcMark, tgtMark)
-    finally { control.unpersist(); () }
-  }
+    var flags: Option[DataFrame] = None
+    try {
+      val targetKV = plan.applier.current(spark, k).select(k, v)
+      val pr = Planner.probe(control, targetKV, srcMark, tgtMark, k, v)
+      if (pr.inSync) {
+        // O5 NOOP: zero writes; marks refresh from the probe's own aggregates
+        // (srcMark is already ≥ every control version since changed == 0)
+        store.putVersions(plan.name, srcMark, tgtMark, pr.maxKey)
+        return (SyncMode.Noop, SyncMetrics(unchanged = pr.sourceWindow))
+      }
 
-  private def syncOptimizedPinned(
-      plan: TablePlan, source: DataFrame, control: DataFrame,
-      srcMark: Long, tgtMark: Long): (SyncMode, SyncMetrics) = {
-    val k = plan.keyCol; val v = plan.versionCol
-    val targetKV = plan.applier.current(spark, k).select(k, v)
-
-    val pr = Planner.probe(control, targetKV, srcMark, tgtMark, k, v)
-    if (pr.inSync) {
-      // O5 NOOP: zero writes; marks refresh from the probe's own aggregates
-      // (srcMark is already ≥ every control version since changed == 0)
-      store.putVersions(plan.name, srcMark, tgtMark, pr.maxKey)
-      return (SyncMode.Noop, SyncMetrics(unchanged = pr.sourceWindow))
-    }
-
-    if (pr.keysInSync && pr.localMut == 0) {
-      // tier 2: identical key sets ⇒ missing = 0 and not-in-window = 0, so
-      // the probe alone fully determines the cost-model stats — no join
-      val stats = Planner.ChangeStats(
-        sourceWindow = pr.sourceWindow, targetCount = pr.targetCount,
-        changed = pr.changed, missing = 0)
-      return Planner.decide(stats, hasStoredMarks = true,
-        strategySupportsOptimized = true, truncateThresholdPct) match {
-        case SyncMode.Noop =>
-          // versions drifted below the mark on equal key sets: the reference
-          // cost model calls this in-sync too (its missing check is key-based)
-          store.putVersions(plan.name, srcMark, tgtMark, pr.maxKey)
-          (SyncMode.Noop, SyncMetrics(unchanged = stats.sourceWindow,
-            excessPercent = stats.excessPercent))
-        case SyncMode.Truncate =>
-          val window = windowed(source, plan)
-          plan.applier.overwrite(window)
+      val tier =
+        if (pr.keysInSync && pr.localMut == 0) {
+          // tier 2: identical key sets ⇒ missing = 0 and not-in-window = 0,
+          // so the probe alone determines the stats — no join. Inserts are
+          // exactly the changed rows: their max version is the control max.
           val mv = pr.maxVersion.getOrElse(srcMark)
-          store.putVersions(plan.name, mv, mv, pr.maxKey)
-          (SyncMode.Truncate, SyncMetrics(
-            modified = stats.changed, changePercent = stats.changePercent,
-            excessPercent = stats.excessPercent))
-        case _ =>
           // update-only inserts keep version > srcMark — saturating +1 is
           // the inclusive bound a prunable source can serve directly
-          val from2 = if (srcMark == Long.MaxValue) srcMark else srcMark + 1
-          val cs = Apply.updateOnlyChangeSet(
-            wideSource(plan, source, from2), control, srcMark, k, v)
-          plan.applier.applyChangeSet(cs, spark, k)
-          // inserts are exactly the changed rows: their max version is the
-          // control max, so both marks advance to it
-          val mv = pr.maxVersion.getOrElse(srcMark)
-          store.putVersions(plan.name, mv, math.max(tgtMark, mv), pr.maxKey)
-          (SyncMode.Incremental, SyncMetrics(
-            modified = stats.changed, changePercent = stats.changePercent,
-            excessPercent = stats.excessPercent))
-      }
-    }
+          val from = if (srcMark == Long.MaxValue) srcMark else srcMark + 1
+          new TierPlan(pr.stats, mv, mv, pr.maxKey,
+            () => Apply.updateOnlyChangeSet(wideSource(plan, source, from), srcMark, k, v))
+        } else {
+          // tier 3: ONE aggregate over the joined flags — decision stats +
+          // fetch threshold + the maxes the mark save needs (A1-A3 in one pass)
+          val f = Apply.incrementalFlags(control, targetKV, lit(srcMark), lit(tgtMark), k, v)
+            .persist()
+          flags = Some(f)
+          val a = f.agg(Planner.ChangeStats.columns.head,
+            Planner.ChangeStats.columns.tail ++ Seq(
+              min(when(col("is_missing"), col("cv"))).as("min_missing_cv"),
+              max(when(col("is_insert"), col("cv"))).as("max_insert_cv"),
+              max(when(col("is_in_control"), col("cv"))).as("max_cv"),
+              max(when(col("is_in_control"), col(k))).as("max_key")): _*).head()
+          // M2 fetch threshold resolved driver-side, so the S8 predicate is a
+          // literal the scan can prune on (A3, CopyOrchestrator.cs:1106-1123);
+          // the changeset keeps version >= threshold — the same inclusive
+          // bound a prunable source serves with commit skipping
+          val threshold = if (a.isNullAt(4)) srcMark else math.min(a.getLong(4), srcMark)
+          new TierPlan(Planner.ChangeStats.fromRow(a),
+            maxCv = if (a.isNullAt(6)) srcMark else a.getLong(6),
+            // purge removed every target version > tgtMark, inserts top out
+            // at max_insert_cv: mark arithmetic, no target re-read
+            maxInsertCv = if (a.isNullAt(5)) tgtMark else a.getLong(5),
+            maxKey = if (a.isNullAt(7)) None else Some(a.getLong(7)),
+            () => Apply.changeSet(
+              wideSource(plan, source, threshold), f, lit(threshold), k, v))
+        }
 
-    val flags = Apply.incrementalFlags(control, targetKV, srcMark, tgtMark, k, v)
-      .persist()
-    try {
-      // ONE aggregate over the joined flags: decision stats + fetch
-      // threshold + the maxes the mark save needs (A1-A3 in one pass)
-      val a = flags.agg(
-        sum(when(col("is_in_control"), 1L).otherwise(0L)).as("source_window"),
-        sum(when(col("is_changed"), 1L).otherwise(0L)).as("changed"),
-        sum(when(col("is_in_target"), 1L).otherwise(0L)).as("target_count"),
-        sum(when(col("is_in_control") && !col("is_in_target"), 1L).otherwise(0L)).as("missing"),
-        min(when(col("is_missing"), col("cv"))).as("min_missing_cv"),
-        max(when(col("is_insert"), col("cv"))).as("max_insert_cv"),
-        max(when(col("is_in_control"), col("cv"))).as("max_cv"),
-        max(when(col("is_in_control"), col(k))).as("max_key")).head()
-      val stats = Planner.ChangeStats(
-        sourceWindow = a.getLong(0), targetCount = a.getLong(2),
-        changed = a.getLong(1), missing = a.getLong(3))
-      val maxCv = if (a.isNullAt(6)) srcMark else a.getLong(6)
-      val maxKey = if (a.isNullAt(7)) None else Some(a.getLong(7))
-
-      Planner.decide(stats, hasStoredMarks = true,
-        strategySupportsOptimized = true, truncateThresholdPct) match {
+      val st = tier.stats
+      Planner.decide(st, truncateThresholdPct) match {
         case SyncMode.Noop =>
-          // probe saw a checksum difference but the cost model still says
-          // in-sync (e.g. only local mutations below the purge bar)
-          store.putVersions(plan.name, srcMark, tgtMark, maxKey)
-          (SyncMode.Noop, SyncMetrics(unchanged = stats.sourceWindow,
-            changePercent = 0, excessPercent = stats.excessPercent))
+          // the probe saw a checksum difference but the cost model still
+          // says in-sync (versions drifted below the mark, or only local
+          // mutations below the purge bar): the reference's missing check
+          // is key-based
+          store.putVersions(plan.name, srcMark, tgtMark, tier.maxKey)
+          (SyncMode.Noop, SyncMetrics(unchanged = st.sourceWindow,
+            excessPercent = st.excessPercent))
 
         case SyncMode.Truncate =>
-          val window = windowed(source, plan)
-          plan.applier.overwrite(window)
+          plan.applier.overwrite(windowed(source, plan))
           // target == window now, on both sides of the mark ledger
-          store.putVersions(plan.name, maxCv, maxCv, maxKey)
+          store.putVersions(plan.name, tier.maxCv, tier.maxCv, tier.maxKey)
           (SyncMode.Truncate, SyncMetrics(
-            modified = stats.changed, changePercent = stats.changePercent,
-            excessPercent = stats.excessPercent))
+            modified = st.changed, changePercent = st.changePercent,
+            excessPercent = st.excessPercent))
 
         case _ =>
-          // M2: delta commit — tombstones + inserts only, never a rewrite.
-          // Threshold resolved driver-side so the S8 predicate is a literal
-          // the scan can prune on (A3, CopyOrchestrator.cs:1106-1123).
-          val minMissingCv = if (a.isNullAt(4)) srcMark else a.getLong(4)
-          val threshold = math.min(minMissingCv, srcMark)
-          // changeSetFromFlags keeps version >= threshold — same inclusive
-          // bound a prunable source serves with commit skipping
-          val cs = Apply.changeSetFromFlags(
-            wideSource(plan, source, threshold), flags, threshold, k, v)
-          plan.applier.applyChangeSet(cs, spark, k)
-          // mark arithmetic (no target re-read): purge removed every target
-          // version > tgtMark, inserts top out at max_insert_cv
-          val maxInsertCv = if (a.isNullAt(5)) tgtMark else a.getLong(5)
-          store.putVersions(plan.name, maxCv, math.max(tgtMark, maxInsertCv), maxKey)
+          // M2: delta commit — tombstones + inserts only, never a rewrite
+          plan.applier.applyChangeSet(tier.changeSet(), spark, k)
+          store.putVersions(plan.name, tier.maxCv,
+            math.max(tgtMark, tier.maxInsertCv), tier.maxKey)
           (SyncMode.Incremental, SyncMetrics(
-            modified = stats.changed, newInSource = stats.missing,
-            changePercent = stats.changePercent, excessPercent = stats.excessPercent))
+            modified = st.changed, newInSource = st.missing,
+            changePercent = st.changePercent, excessPercent = st.excessPercent))
       }
-    } finally { flags.unpersist(); () }
+    } finally { flags.foreach(_.unpersist()); control.unpersist(); () }
   }
 
   /** M1 standard: full snapshot write; marks from the fetched window's own

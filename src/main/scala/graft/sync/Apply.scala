@@ -1,7 +1,7 @@
 package graft.sync
 
 import graft.model.ChangeClass
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The merge/apply layer — M1/M2/M3 re-expressed as distributed plans.
@@ -92,7 +92,9 @@ object Apply {
       targetMark: Long,
       keyCol: String = "RecId",
       versionCol: String = "SysRowVersion"): DataFrame = {
-    val cs = incrementalChangeSet(source, control, target, sourceMark, targetMark,
+    val flags = incrementalFlags(control, target, lit(sourceMark), lit(targetMark),
+      keyCol, versionCol)
+    val cs = changeSet(source, flags, fetchThreshold(flags, lit(sourceMark)),
       keyCol, versionCol)
     target
       .join(cs.deleteKeys, Seq(keyCol), "left_anti")
@@ -113,47 +115,19 @@ object Apply {
   /** The reference expresses the key-set algebra as THREE sequential
     * server-side DELETEs plus two anti-joins (a SQL Server statement-at-a-
     * time artifact). Columnar re-expression: ONE full-outer join of the
-    * control window against the target keys yields, per key, every flag the
-    * pipeline needs — changed (J4), locally-mutated, not-in-window (J3),
-    * missing-after-delete (J2), to-insert — so the whole changeset costs one
-    * key-join + one aggregate + one semi-join on the source, instead of ~8
-    * shuffles. Semantics are unchanged (oracle-checked via q_m2).
+    * control window against the target (key, version) pairs yields, per
+    * key, every flag the pipeline needs — changed (J4), locally-mutated,
+    * not-in-window (J3), missing-after-delete (J2), to-insert — so the
+    * whole changeset costs one key-join + one aggregate + one semi-join on
+    * the source, instead of ~8 shuffles. The same flags feed the cost
+    * model's counts ([[Planner.ChangeStats.columns]]). Marks are columns: a
+    * literal on the runner path, a scalar subquery in [[Planner.decideAsQuery]].
     */
-  def incrementalChangeSet(
-      source: DataFrame,
-      control: DataFrame,
-      target: DataFrame,
-      sourceMark: Long,
-      targetMark: Long,
-      keyCol: String = "RecId",
-      versionCol: String = "SysRowVersion"): ChangeSet = {
-    val flags = incrementalFlags(control, target, sourceMark, targetMark, keyCol, versionCol)
-
-    val deleteKeys = flags.filter(col("is_delete")).select(keyCol)
-
-    // threshold: min version among missing control rows, floored by the mark
-    // (A3 + TimestampHelper.MinTimestamp semantics)
-    val minMissing = flags
-      .agg(min(when(col("is_missing"), col("cv"))).as("v"))
-      .select(least(coalesce(col("v"), lit(sourceMark)), lit(sourceMark)).as("threshold"))
-
-    val insertKeys = flags.filter(col("is_insert")).select(keyCol)
-    val inserts = source
-      .crossJoin(broadcast(minMissing))
-      .filter(col(versionCol) >= col("threshold")) // S8 over-fetch
-      .drop("threshold")
-      .join(insertKeys, Seq(keyCol), "left_semi") // P6 re-filter
-
-    ChangeSet(deleteKeys, inserts, flags)
-  }
-
-  /** The ONE full-outer key join behind the incremental pipeline: per key,
-    * every flag the changeset needs (see [[incrementalChangeSet]] doc). */
   def incrementalFlags(
       control: DataFrame,
       target: DataFrame,
-      sourceMark: Long,
-      targetMark: Long,
+      sourceMark: Column,
+      targetMark: Column,
       keyCol: String = "RecId",
       versionCol: String = "SysRowVersion"): DataFrame = {
     val c = control.select(col(keyCol), col(versionCol).as("cv"), lit(1).as("in_c"))
@@ -163,9 +137,9 @@ object Apply {
     c.join(t, Seq(keyCol), "full_outer")
       .select(col(keyCol), col("cv"),
         // J4: version advanced beyond the stored source mark
-        (coalesce(inC, lit(false)) && col("cv") > lit(sourceMark)).as("is_changed"),
+        (coalesce(inC, lit(false)) && col("cv") > sourceMark).as("is_changed"),
         // local purge: target-side version beyond the stored target mark
-        (coalesce(inT, lit(false)) && col("tv") > lit(targetMark)).as("is_local_mut"),
+        (coalesce(inT, lit(false)) && col("tv") > targetMark).as("is_local_mut"),
         coalesce(inC, lit(false)).as("is_in_control"),
         coalesce(inT, lit(false)).as("is_in_target"))
       .withColumn("is_delete",
@@ -186,8 +160,8 @@ object Apply {
     *   inserts    = source rows with version > sourceMark   (the changes)
     *   deleteKeys = keys(inserts)                           (replace-in-place)
     *
-    * Why no join: `control` here is the (key, version) projection of
-    * `source` itself (the runner's S7 control pass), so the changed keys
+    * Why no join: the runner's control pass (S7) is the (key, version)
+    * projection of `source` itself, so the changed keys
     * {k : v(k) > mark} are BY CONSTRUCTION the keys of the fetched rows —
     * the S8 over-fetch (`>=`) and P6 key re-filter exist only to catch
     * missing rows, of which tier 2 provably has none. The filter is a
@@ -203,7 +177,6 @@ object Apply {
     */
   def updateOnlyChangeSet(
       source: DataFrame,
-      control: DataFrame,
       sourceMark: Long,
       keyCol: String = "RecId",
       versionCol: String = "SysRowVersion"): ChangeSet = {
@@ -212,31 +185,43 @@ object Apply {
     ChangeSet(changedKeys, inserts, changedKeys)
   }
 
-  /** Runner-path changeset with a DRIVER-RESOLVED threshold: identical
-    * semantics to [[incrementalChangeSet]] (which carries the threshold as a
-    * broadcast scalar inside the plan), but the S8 fetch predicate becomes a
-    * LITERAL — so it pushes into the parquet scan and row-group min/max
+  /** The incremental changeset over [[incrementalFlags]]: tombstones for
+    * every `is_delete` key, inserts = the S8 delta fetch (source rows with
+    * version >= `threshold`, a deliberate over-fetch: `>=` vs `>`, SURVEY
+    * §7.3.4) re-filtered to the `is_insert` keys (P6 as a semi-join, never
+    * a collected set — FilterDataTableByRecIds, AxDbDataService.cs:937-955;
+    * AQE broadcasts the keys when they fit).
+    *
+    * The runner resolves the threshold DRIVER-side and passes a literal, so
+    * the S8 predicate pushes into the parquet scan and row-group min/max
     * skipping (or a JDBC WHERE) prunes the unchanged bulk of the source.
     * The reference makes the same trade: it computes the fetch threshold
-    * driver-side (A3, CopyOrchestrator.cs:1106-1123) and sends it as a query
-    * parameter (Tier2DataService.cs:381-434). On a version-clustered table
-    * layout this is the difference between scanning ~change% and scanning
-    * 100% of a 100 TB table. */
-  def changeSetFromFlags(
+    * driver-side (A3, CopyOrchestrator.cs:1106-1123) and sends it as a
+    * query parameter (Tier2DataService.cs:381-434). On a version-clustered
+    * table layout this is the difference between scanning ~change% and
+    * scanning 100% of a 100 TB table. Plans that must stay one lazy query
+    * pass [[fetchThreshold]] instead. */
+  def changeSet(
       source: DataFrame,
       flags: DataFrame,
-      threshold: Long,
+      threshold: Column,
       keyCol: String = "RecId",
       versionCol: String = "SysRowVersion"): ChangeSet = {
     val deleteKeys = flags.filter(col("is_delete")).select(keyCol)
     val insertKeys = flags.filter(col("is_insert")).select(keyCol)
-    // S8 over-fetch (pushed to the scan), then the P6 re-filter: a plain
-    // semi-join, AQE-broadcast when insertKeys fits
     val inserts = source
-      .filter(col(versionCol) >= lit(threshold))
+      .filter(col(versionCol) >= threshold)
       .join(insertKeys, Seq(keyCol), "left_semi")
     ChangeSet(deleteKeys, inserts, flags)
   }
+
+  /** The S8 fetch threshold as an in-plan scalar subquery: the min version
+    * among missing control rows, floored by the mark (A3 +
+    * TimestampHelper.MinTimestamp, CopyOrchestrator.cs:1106-1123). */
+  def fetchThreshold(flags: DataFrame, sourceMark: Column): Column =
+    flags.agg(min(when(col("is_missing"), col("cv"))).as("v"))
+      .select(least(coalesce(col("v"), sourceMark), sourceMark))
+      .scalar()
 
   /** Write a new target state to parquet atomically enough for tests
     * (overwrite into a fresh dir). Lake-native sink analog of the bulk-insert

@@ -1,7 +1,7 @@
 package graft.sync
 
 import graft.model.SyncMode
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** The sync planner — the reference's hand-rolled "optimizer" (SURVEY §4).
@@ -19,9 +19,14 @@ import org.apache.spark.sql.functions._
   *          TRUNCATE    if changePct>=T ∨ excessPct>=T           (O6, :884-914)
   *          INCREMENTAL otherwise
   *
-  * plus the degradation ladder (SURVEY §7.3.8): no stored marks ⇒ STANDARD,
-  * Sql strategy without @sysRowVersionFilter ⇒ STANDARD, corrupt marks ⇒
-  * STANDARD, full source coverage ⇒ TRUNCATE (O7, AxDbDataService.cs:414-424).
+  * The degradation ladder (SURVEY §7.3.8) runs before any of this, in
+  * [[graft.run.SyncRunner.runTable]]: no stored marks, corrupt marks, or a
+  * strategy that cannot run incrementally (Sql without
+  * @sysRowVersionFilter, forced truncate, full table) ⇒ STANDARD.
+  *
+  * [[decide]] is the one Scala definition of the mode rule and
+  * [[ChangeStats.columns]] the one computation of its counts; the runner,
+  * the oracle-checked [[decideAsQuery]] and Bench all go through them.
   */
 object Planner {
 
@@ -39,29 +44,25 @@ object Planner {
       else (targetCount - sourceWindow).toDouble * 100.0 / sourceWindow
   }
 
-  /** One distributed pass over control + target keys → the counts the cost
-    * model needs. Moves ~16 bytes/row (key + version), the optimized-mode
-    * bargain the reference is built around (README.md:241-244). */
-  def changeStats(
-      control: DataFrame,
-      targetKeys: DataFrame,
-      sourceMark: Long,
-      keyCol: String = "RecId",
-      versionCol: String = "SysRowVersion"): ChangeStats = {
-    // counts in ONE pass over control; the missing check streams the target
-    // against the bounded control window (AQE broadcasts it when it fits)
-    val Array(sourceWindow, changed) = control
-      .agg(count(lit(1)), sum(when(col(versionCol) > lit(sourceMark), 1L).otherwise(0L)))
-      .na.fill(0L)
-      .head().toSeq.map(_.asInstanceOf[Long]).toArray
-    val targetCount = targetKeys.count()
-    // missing = |control| − |control ∩ target|, oriented so the BIG target
-    // streams against the bounded control window on the build side (an
-    // anti/semi join can only build on its right — control ▷ target would
-    // stream the small side and build on 100 TB of target keys)
-    val present = targetKeys
-      .join(control.select(keyCol), Seq(keyCol), "left_semi").count()
-    ChangeStats(sourceWindow, targetCount, changed, sourceWindow - present)
+  object ChangeStats {
+    /** The four cost-model counts as aggregate columns over
+      * [[Apply.incrementalFlags]] — ONE pass over the joined key flags
+      * (~16 B/row of control columns, the optimized-mode bargain of
+      * README.md:241-244). The runner appends its mark columns to the same
+      * `agg`; [[decideAsQuery]] runs it alone. */
+    val columns: Seq[Column] = Seq(
+      sum(when(col("is_in_control"), 1L).otherwise(0L)).as("source_window"),
+      sum(when(col("is_changed"), 1L).otherwise(0L)).as("changed"),
+      sum(when(col("is_in_target"), 1L).otherwise(0L)).as("target_count"),
+      sum(when(col("is_in_control") && !col("is_in_target"), 1L).otherwise(0L))
+        .as("missing"))
+
+    /** [[columns]] read back from the first four fields of an aggregate row
+      * (an empty flags frame sums to null: zero). */
+    def fromRow(r: Row): ChangeStats = {
+      def n(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+      ChangeStats(sourceWindow = n(0), targetCount = n(2), changed = n(1), missing = n(3))
+    }
   }
 
   /** Result of the shuffle-free sync probe: per-side counts, the source-side
@@ -89,6 +90,9 @@ object Planner {
       * semi-join ([[Apply.updateOnlyChangeSet]]); no wide join needed. */
     def keysInSync: Boolean =
       sourceWindow == targetCount && keyCheckSource == keyCheckTarget
+    /** The cost-model stats the probe alone determines: on equal key sets
+      * ([[keysInSync]]) no control key is missing from the target. */
+    def stats: ChangeStats = ChangeStats(sourceWindow, targetCount, changed, missing = 0)
   }
 
   /** O5 perfect-sync short-circuit WITHOUT a join: two column-pruned scans
@@ -191,58 +195,43 @@ object Planner {
       (if (layoutProbe.isDefined) Maintenance.Recluster else Maintenance.Compact)
     else Maintenance.None
 
-  def decide(
-      stats: ChangeStats,
-      hasStoredMarks: Boolean,
-      strategySupportsOptimized: Boolean = true,
-      thresholdPct: Double = DefaultTruncateThresholdPct): SyncMode = {
-    if (!hasStoredMarks || !strategySupportsOptimized) SyncMode.Standard
-    else if (stats.changed == 0 && stats.missing == 0 &&
-             stats.targetCount <= stats.sourceWindow) SyncMode.Noop
+  /** O4/O5/O6 cost model (see the header). A probe that reports
+    * [[SyncProbe.inSync]] implies NOOP here: changed == 0, equal counts and
+    * equal key sets give missing == 0 and targetCount == sourceWindow. */
+  def decide(stats: ChangeStats,
+      thresholdPct: Double = DefaultTruncateThresholdPct): SyncMode =
+    if (stats.changed == 0 && stats.missing == 0 &&
+        stats.targetCount <= stats.sourceWindow) SyncMode.Noop
     else if (stats.changePercent >= thresholdPct || stats.excessPercent >= thresholdPct)
       SyncMode.Truncate
     else SyncMode.Incremental
-  }
 
-  /** The whole decision as one distributed plan (no driver counts) — used by
-    * the oracle-checked planner query: emits a single row with the stats and
-    * the chosen mode. Mirrors decide(); keep in lockstep. */
+  /** One row of [[decideAsQuery]]. */
+  final case class Decision(
+      source_window: Long, changed: Long, target_count: Long, missing: Long,
+      change_pct: Double, excess_pct: Double, mode: String)
+
+  /** The whole decision as one distributed plan (no driver counts) — the
+    * oracle-checked planner queries: the runner's flags join and
+    * [[ChangeStats.columns]] aggregate, then [[decide]] over the one row.
+    * `target` carries (key, version); `storedMark` is a 1-row frame with
+    * column `stored_mark`, read in-plan as a scalar subquery. */
   def decideAsQuery(
       control: DataFrame,
-      targetKeys: DataFrame,
-      storedMark: DataFrame, // 1-row frame with column stored_mark
+      target: DataFrame,
+      storedMark: DataFrame,
       thresholdPct: Double = DefaultTruncateThresholdPct,
       keyCol: String = "RecId",
       versionCol: String = "SysRowVersion"): DataFrame = {
-    // ONE full-outer key join + ONE aggregate: every count the cost model
-    // needs falls out of the joined row flags (vs 3 separate scans + a semi
-    // join — the single-pass shape shuffles each key set exactly once)
-    val c = control.select(col(keyCol), col(versionCol).as("cv"), lit(1).as("in_c"))
-    val t = targetKeys.select(col(keyCol), lit(1).as("in_t"))
-    val joined = c.join(t, Seq(keyCol), "full_outer")
-      .crossJoin(broadcast(storedMark))
-    joined.agg(
-        sum(when(col("in_c") === 1, 1L).otherwise(0L)).as("source_window"),
-        sum(when(col("in_c") === 1 && col("cv") > col("stored_mark"), 1L)
-          .otherwise(0L)).as("changed"),
-        sum(when(col("in_t") === 1, 1L).otherwise(0L)).as("target_count"),
-        sum(when(col("in_c") === 1 && col("in_t").isNull, 1L).otherwise(0L)).as("missing"))
-      .na.fill(0L)
-      // empty control window ⇒ define both pcts as 100 (matching
-      // ChangeStats.changePercent/excessPercent for sourceWindow==0) so this
-      // path picks TRUNCATE exactly like decide() — null pcts would silently
-      // fall through to INCREMENTAL
-      .withColumn("change_pct",
-        when(col("source_window") === 0, lit(100.0))
-          .otherwise(col("changed") * 100.0 / col("source_window")))
-      .withColumn("excess_pct",
-        when(col("source_window") === 0, lit(100.0))
-          .otherwise((col("target_count") - col("source_window")) * 100.0 / col("source_window")))
-      .withColumn("mode",
-        when(col("changed") === 0 && col("missing") === 0 &&
-             col("target_count") <= col("source_window"), lit("NOOP"))
-          .when(col("change_pct") >= thresholdPct || col("excess_pct") >= thresholdPct,
-            lit("TRUNCATE"))
-          .otherwise(lit("INCREMENTAL")))
+    val mark = storedMark.select("stored_mark").scalar()
+    Apply.incrementalFlags(control, target, mark, mark, keyCol, versionCol)
+      .agg(ChangeStats.columns.head, ChangeStats.columns.tail: _*)
+      .map { r =>
+        val s = ChangeStats.fromRow(r)
+        Decision(s.sourceWindow, s.changed, s.targetCount, s.missing,
+          s.changePercent, s.excessPercent,
+          decide(s, thresholdPct).toString.toUpperCase)
+      }(Encoders.product[Decision])
+      .toDF()
   }
 }

@@ -52,10 +52,12 @@ object DumpPlans {
     dump("M2 incremental changeset — delete keys",
       "The whole key algebra (J2/J3/J4 + local purge) hangs off ONE full-outer " +
         "join; flags are projections, not extra joins.",
-      Apply.incrementalChangeSet(
-        SyncFixtures.source(spark, d),
-        SyncFixtures.control(SyncFixtures.source(spark, d)),
-        SyncFixtures.target(spark, d), 1L, 1L).deleteKeys)
+      {
+        val flags = Apply.incrementalFlags(
+          SyncFixtures.control(SyncFixtures.source(spark, d)),
+          SyncFixtures.target(spark, d), lit(1L), lit(1L))
+        Apply.changeSet(SyncFixtures.source(spark, d), flags, lit(1L)).deleteKeys
+      })
 
     dump("Planner cost model (one pass)",
       "Single full-outer key join + one aggregate produces every count the " +
@@ -88,9 +90,7 @@ object DumpPlans {
       "ZERO joins: the fetch is one literal version predicate (PushedFilters " +
         "— row-group pruning on a clustered layout) and tombstones are its " +
         "key projection.",
-      graft.sync.Apply.updateOnlyChangeSet(
-        SyncFixtures.source(spark, d),
-        SyncFixtures.control(SyncFixtures.source(spark, d)), 0L).inserts)
+      graft.sync.Apply.updateOnlyChangeSet(SyncFixtures.source(spark, d), 0L).inserts)
 
     dump("Changelog replay (shuffle-free base, O(total changes))",
       "Commit events alone go through the newest-wins window; the base " +
@@ -105,9 +105,7 @@ object DumpPlans {
         val base = SyncFixtures.perfect(spark, d)
         graft.sync.LakeTable.overwrite(base, t)
         graft.sync.LakeTable.appendCommit(
-          Apply.updateOnlyChangeSet(
-            SyncFixtures.source(spark, d),
-            SyncFixtures.control(SyncFixtures.source(spark, d)), 0L), t)
+          Apply.updateOnlyChangeSet(SyncFixtures.source(spark, d), 0L), t)
         graft.sync.LakeTable.read(spark, t)
       })
 
@@ -266,9 +264,7 @@ object DumpPlans {
           .toString + "/t"
         graft.sync.LakeTable.overwrite(SyncFixtures.perfect(spark, d), t)
         graft.sync.LakeTable.appendCommit(
-          Apply.updateOnlyChangeSet(
-            SyncFixtures.source(spark, d),
-            SyncFixtures.control(SyncFixtures.source(spark, d)), 0L), t)
+          Apply.updateOnlyChangeSet(SyncFixtures.source(spark, d), 0L), t)
         graft.sync.LakeTable.readKeyRange(spark, t, 0L, 2000000000000L)
       })
 

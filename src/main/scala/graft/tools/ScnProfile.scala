@@ -54,7 +54,7 @@ object ScnProfile {
     def osSync(): Unit = { new ProcessBuilder("sync").start().waitFor(); () }
     (1 to 3).foreach { i =>
       osSync()
-      val cs = Apply.updateOnlyChangeSet(srcT, ctl(srcT), mark)
+      val cs = Apply.updateOnlyChangeSet(srcT, mark)
       time(s"  deletes write #$i") {
         cs.deleteKeys.write.mode("overwrite").parquet(s"$tmp/incr/deletes")
       }
@@ -65,7 +65,7 @@ object ScnProfile {
     (1 to 3).foreach { i =>
       osSync()
       time(s"updateOnly commit #$i") {
-        val cs = Apply.updateOnlyChangeSet(srcT, ctl(srcT), mark)
+        val cs = Apply.updateOnlyChangeSet(srcT, mark)
         Apply.writeChangeSet(cs, s"$tmp/incr")
       }
     }
@@ -75,7 +75,7 @@ object ScnProfile {
         srcT.write.mode("overwrite").parquet(s"$tmp/full")
       }
     }
-    val cs = Apply.updateOnlyChangeSet(srcT, ctl(srcT), mark)
+    val cs = Apply.updateOnlyChangeSet(srcT, mark)
     println(cs.inserts.queryExecution.executedPlan.toString.linesIterator
       .filter(l => l.contains("FileScan") || l.contains("Join") || l.contains("Exchange"))
       .mkString("\n"))

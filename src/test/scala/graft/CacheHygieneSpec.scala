@@ -68,6 +68,32 @@ class CacheHygieneSpec extends AnyFunSuite {
     assert(left.isEmpty, s"checkpoint RDDs survived releaseAll: $left")
   }
 
+  test("pagerank, BPE and perceptron: releaseAll frees their checkpoints") {
+    spark.catalog.clearCache()
+    CacheLease.releaseAll(spark)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // deep: 10 rounds > checkpointEvery 4 ⇒ inputs + every 4th round cut
+    val ring = (0L until 12L).map(i => (i, (i + 1) % 12)).toDF("src", "dst")
+    val pr = Graph.pagerankMicros(ring, iters = 10, checkpointEvery = 4)
+      .as[(Long, Long)].collect()
+    assert(pr.length == 12 && pr.forall(_._2 == 1000000L))
+    // 17 merges ⇒ the type table plus one periodic re-checkpoint
+    val merges = Bpe.trainMerges(
+      Seq((1L, "abcdefghijklmnopqrstuvwxyz"), (2L, "abcdefghijklmnopqrstuvwxyz"))
+        .toDF("doc_id", "text"), col("text"), nMerges = 17)
+    assert(merges.size == 17)
+    val rounds = Perceptron.train(
+      Seq((1L, 1L, 2L), (-1L, 1L, -3L)).toDF("y", "x0", "x1"), "y",
+      Seq("x0", "x1"), rounds = 2)
+    assert(rounds.last.nMistakes == 0L)
+    assert(sc.getPersistentRDDs.keySet.diff(before).nonEmpty,
+      "the three operators should have left checkpoint RDDs behind")
+    CacheLease.releaseAll(spark)
+    val left = sc.getPersistentRDDs.keySet.diff(before)
+    assert(left.isEmpty, s"checkpoint RDDs survived releaseAll: $left")
+  }
+
   test("releaseAll leaves caller-owned caches untouched") {
     spark.catalog.clearCache()
     val mine = freshVectors().persist() // caller-owned: NOT a lease

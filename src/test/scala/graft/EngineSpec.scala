@@ -15,6 +15,14 @@ object TestSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** The general (tier-3) changeset with its threshold kept in-plan, as the
+    * oracle-checked lake queries build it. */
+  def incrementalChangeSet(source: DataFrame, control: DataFrame, target: DataFrame,
+      sourceMark: Long, targetMark: Long): Apply.ChangeSet = {
+    val flags = Apply.incrementalFlags(control, target, lit(sourceMark), lit(targetMark))
+    Apply.changeSet(source, flags, Apply.fetchThreshold(flags, lit(sourceMark)))
+  }
 }
 
 /** Classification + merge semantics on hand-built rows — the delta-comparison
@@ -130,7 +138,7 @@ class ApplySpec extends AnyFunSuite {
     val source = t(Seq((1L, 10L, "a"), (2L, 150L, "b2")))
     val control = source.select("RecId", "SysRowVersion")
     val target = t(Seq((1L, 10L, "a"), (2L, 20L, "b"), (9L, 5L, "gone")))
-    val cs = Apply.incrementalChangeSet(source, control, target, 100L, 100L)
+    val cs = TestSpark.incrementalChangeSet(source, control, target, 100L, 100L)
     assert(cs.deleteKeys.as[Long].collect().toSet == Set(2L, 9L))
     assert(contents(cs.inserts) == Set((2L, 150L, "b2")))
   }
@@ -161,8 +169,8 @@ class ApplySpec extends AnyFunSuite {
     val control = source.select("RecId", "SysRowVersion")
     val target = t((1L to 6L).map(i => (i, i, s"old$i")))
     val mark = 6L
-    val fast = Apply.updateOnlyChangeSet(source, control, mark)
-    val general = Apply.incrementalChangeSet(source, control, target, mark, mark)
+    val fast = Apply.updateOnlyChangeSet(source, mark)
+    val general = TestSpark.incrementalChangeSet(source, control, target, mark, mark)
     assert(fast.deleteKeys.as[Long].collect().toSet ==
       general.deleteKeys.as[Long].collect().toSet)
     assert(contents(fast.inserts) == contents(general.inserts))
@@ -193,29 +201,23 @@ class PlannerSpec extends AnyFunSuite {
 
   test("cost-model thresholds (CopyOrchestrator.cs:884-914)") {
     // 5% changes → INCREMENTAL
-    assert(decide(ChangeStats(1000, 1000, 50, 0), hasStoredMarks = true) == SyncMode.Incremental)
+    assert(decide(ChangeStats(1000, 1000, 50, 0)) == SyncMode.Incremental)
     // 40% changes → TRUNCATE (>= comparison)
-    assert(decide(ChangeStats(1000, 1000, 400, 0), hasStoredMarks = true) == SyncMode.Truncate)
+    assert(decide(ChangeStats(1000, 1000, 400, 0)) == SyncMode.Truncate)
     // 40% excess → TRUNCATE
-    assert(decide(ChangeStats(1000, 1400, 0, 0), hasStoredMarks = true) == SyncMode.Truncate)
+    assert(decide(ChangeStats(1000, 1400, 0, 0)) == SyncMode.Truncate)
   }
 
   test("negative excess never triggers truncate (CopyOrchestrator.cs:889-894)") {
-    assert(decide(ChangeStats(1000, 400, 50, 600), hasStoredMarks = true) == SyncMode.Incremental)
+    assert(decide(ChangeStats(1000, 400, 50, 600)) == SyncMode.Incremental)
   }
 
   test("perfect sync short-circuits to NOOP (CopyOrchestrator.cs:1003-1046)") {
-    assert(decide(ChangeStats(1000, 1000, 0, 0), hasStoredMarks = true) == SyncMode.Noop)
-  }
-
-  test("degradation ladder: no marks or unsupported strategy → STANDARD") {
-    assert(decide(ChangeStats(1000, 1000, 0, 0), hasStoredMarks = false) == SyncMode.Standard)
-    assert(decide(ChangeStats(1000, 1000, 0, 0), hasStoredMarks = true,
-      strategySupportsOptimized = false) == SyncMode.Standard)
+    assert(decide(ChangeStats(1000, 1000, 0, 0)) == SyncMode.Noop)
   }
 
   test("empty source window → 100% change → TRUNCATE") {
-    assert(decide(ChangeStats(0, 10, 0, 0), hasStoredMarks = true) == SyncMode.Truncate)
+    assert(decide(ChangeStats(0, 10, 0, 0)) == SyncMode.Truncate)
   }
 
   test("checksum probe: in-sync detected shuffle-free; any difference falls through (O5 fast path)") {
@@ -246,7 +248,9 @@ class PlannerSpec extends AnyFunSuite {
     val control = Seq((1L, 10L), (2L, 150L), (4L, 160L))
       .toDF("RecId", "SysRowVersion")
     val targetKeys = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("RecId", "SysRowVersion")
-    val st = changeStats(control, targetKeys, 100L)
+    val st = ChangeStats.fromRow(
+      Apply.incrementalFlags(control, targetKeys, lit(100L), lit(100L))
+        .agg(ChangeStats.columns.head, ChangeStats.columns.tail: _*).head())
     assert(st == ChangeStats(sourceWindow = 3, targetCount = 3, changed = 2, missing = 1))
   }
 }
@@ -280,17 +284,6 @@ class ExtractSpec extends AnyFunSuite {
 class PlannerQuerySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  test("decideAsQuery with an EMPTY control window picks TRUNCATE like decide() (ADVICE r1)") {
-    val control = Seq.empty[(Long, Long)].toDF("RecId", "SysRowVersion")
-    val target = Seq((1L, 10L), (2L, 20L)).toDF("RecId", "SysRowVersion")
-    val mark = Seq(Tuple1(100L)).toDF("stored_mark")
-    val row = graft.sync.Planner.decideAsQuery(control, target.select("RecId"), mark).head()
-    assert(row.getAs[String]("mode") == "TRUNCATE")
-    assert(row.getAs[Double]("change_pct") == 100.0)
-    assert(graft.sync.Planner.decide(
-      graft.sync.Planner.ChangeStats(0, 2, 0, 0), hasStoredMarks = true) == SyncMode.Truncate)
-  }
 
   test("MakeScaledData invariants: N× rows, RecId-unique and magnitude-" +
       "stable (partkey shift), copy-0 text verbatim, other copies salted") {

@@ -137,13 +137,20 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("tier-2 changeset: literal version predicate pushed to the scan, ZERO joins") {
     val cs = graft.sync.Apply.updateOnlyChangeSet(
-      spark.read.parquet(tableDir),
-      spark.read.parquet(tableDir).select("RecId", "SysRowVersion"),
-      sourceMark = 5000L)
+      spark.read.parquet(tableDir), sourceMark = 5000L)
     val plan = cs.inserts.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("GreaterThan(SysRowVersion,5000)"),
       s"fetch predicate must reach the scan:\n$plan")
     assert(!plan.contains("Join"), s"tier-2 must not join:\n$plan")
+  }
+
+  test("tier-3 changeset: a literal threshold reaches PushedFilters") {
+    val kv = spark.read.parquet(tableDir).select("RecId", "SysRowVersion")
+    val flags = graft.sync.Apply.incrementalFlags(kv, kv, lit(5000L), lit(5000L))
+    val plan = graft.sync.Apply.changeSet(spark.read.parquet(tableDir), flags, lit(4000L))
+      .inserts.queryExecution.executedPlan.toString
+    assert(plan.contains("GreaterThanOrEqual(SysRowVersion,4000)"),
+      s"the S8 fetch predicate must reach the scan:\n$plan")
   }
 
   test("sync probe is one job with no data-keyed exchange (shuffle-free NOOP)") {

@@ -20,7 +20,7 @@ class ReplayPruneSpec extends AnyFunSuite {
       if (i % 10 == 0) (i, i + 5000L, s"new$i", s"wide$i") else (i, i, s"payload$i", s"wide$i"))
       .toDF("RecId", "SysRowVersion", "payload", "wide_col")
     LakeTable.appendCommit(
-      Apply.updateOnlyChangeSet(src, src.select("RecId", "SysRowVersion"), 1000L), t)
+      Apply.updateOnlyChangeSet(src, 1000L), t)
 
     val kv = LakeTable.read(spark, t).select("RecId", "SysRowVersion")
     val scans = kv.queryExecution.executedPlan.toString

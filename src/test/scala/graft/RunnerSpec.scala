@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.model.SyncMode
+import graft.model.{FetchStrategy, SyncMode}
 import graft.run.{PostActions, SyncRunner}
 import graft.state.SyncStateStore
 import graft.sync.{LakeTable, SyncFixtures}
@@ -76,6 +76,32 @@ class RunnerSpec extends AnyFunSuite {
     val r4 = runner.runAll(Seq(plan))
     assert(r4.head.ok && r4.head.mode == SyncMode.Truncate)
     assert(LakeTable.read(spark, s"$dir/tgt_t1").count() == 500)
+  }
+
+  // the degradation ladder's strategy rungs (SURVEY §7.3.8): stored marks
+  // and an existing target, yet a strategy that cannot run incrementally
+  // routes to STANDARD in runTable — decide() never sees it
+  Seq(
+    "full table" -> FetchStrategy.FullTable,
+    "forced top-N" -> FetchStrategy.TopNByKey(Long.MaxValue, forceTruncate = true),
+    "placeholder-free Sql" ->
+      FetchStrategy.CustomSql("SELECT * FROM t WHERE RecId > 0", Long.MaxValue)
+  ).foreach { case (label, strategy) =>
+    test(s"stored marks + $label strategy: STANDARD") {
+      val (dir, store, runner) = newEnv()
+      val src = mkSource(dir, "fb", identity)
+      def plan(s: FetchStrategy) = runner.TablePlan("FB", src, s"$dir/tgt_fb", s)
+      val default = FetchStrategy.TopNByKey(Long.MaxValue)
+      assert(runner.runAll(Seq(plan(default))).head.mode == SyncMode.Standard)
+      // marks in place: the default strategy re-syncs the unchanged source
+      // as NOOP, the opted-out one as a full STANDARD reload
+      assert(store.get("FB").flatMap(_.sourceVersion).contains(500L))
+      assert(runner.runAll(Seq(plan(default))).head.mode == SyncMode.Noop)
+      val r = runner.runAll(Seq(plan(strategy))).head
+      assert(r.ok && r.mode == SyncMode.Standard, r.toString)
+      assert(LakeTable.read(spark, s"$dir/tgt_fb").count() == 500)
+      assert(store.get("FB").flatMap(_.sourceVersion).contains(500L))
+    }
   }
 
   test("compaction after N commits folds the log into a fresh base (bounded replay)") {
@@ -335,7 +361,7 @@ class ChangeLogSpec extends AnyFunSuite {
     // commit 1: source updated rows 1-5, deleted rows 96-100
     val src1 = t((1L to 95L).map(i =>
       if (i <= 5) (i, i + 1000L, s"v1_$i") else (i, i, s"v0_$i")))
-    val cs1 = Apply.incrementalChangeSet(
+    val cs1 = TestSpark.incrementalChangeSet(
       src1, src1.select("RecId", "SysRowVersion"),
       spark.read.parquet(s"$dir/base"), 100L, 100L)
     assert(ChangeLog.append(cs1, s"$dir/log") == 0)
@@ -346,7 +372,7 @@ class ChangeLogSpec extends AnyFunSuite {
       else if (i <= 5) (i, i + 1000L, s"v1_$i") else (i, i, s"v0_$i"))
       ++ (101L to 103L).map(i => (i, i + 2000L, s"new_$i")))
     val cur1 = ChangeLog.replay(spark, s"$dir/base", s"$dir/log")
-    val cs2 = Apply.incrementalChangeSet(
+    val cs2 = TestSpark.incrementalChangeSet(
       src2, src2.select("RecId", "SysRowVersion"), cur1, 1005L, 1005L)
     assert(ChangeLog.append(cs2, s"$dir/log") == 1)
 
@@ -690,7 +716,7 @@ class LakeTableCrashSpec extends AnyFunSuite {
       if (i <= 3) (i, i + 100L, s"v2_$i") else (i, i, s"v1_$i"))
       .toDF("RecId", "SysRowVersion", "payload")
     LakeTable.appendCommit(
-      Apply.updateOnlyChangeSet(src, src.select("RecId", "SysRowVersion"), 50L), t)
+      Apply.updateOnlyChangeSet(src, 50L), t)
     assert(LakeTable.read(spark, t)
       .filter(col("SysRowVersion") > 100L).count() == 3)
   }
@@ -705,7 +731,7 @@ class LakeTableCrashSpec extends AnyFunSuite {
       if (i <= 4) (i, i + 100L, s"v2_$i") else (i, i, s"v1_$i"))
       .toDF("RecId", "SysRowVersion", "payload")
     LakeTable.appendCommit(
-      Apply.updateOnlyChangeSet(src, src.select("RecId", "SysRowVersion"), 40L), t)
+      Apply.updateOnlyChangeSet(src, 40L), t)
     assert(LakeTable.pendingCommits(t) == 1)
     assert(LakeTable.read(spark, t).filter(col("SysRowVersion") > 100L).count() == 4)
     LakeTable.compact(spark, t)
@@ -763,7 +789,7 @@ class LakeTableCrashSpec extends AnyFunSuite {
       if (i <= 4) (i, i + 100L, s"v2_$i") else (i, i, s"v1_$i"))
       .toDF("RecId", "SysRowVersion", "payload")
     LakeTable.appendCommit(
-      Apply.updateOnlyChangeSet(src, src.select("RecId", "SysRowVersion"), 40L), t)
+      Apply.updateOnlyChangeSet(src, 40L), t)
     assert(LakeTable.read(spark, t).filter(col("SysRowVersion") > 100L).count() == 4)
     // second overwrite replaces an EXISTING pointer: FileSystem.rename
     // refuses (dst exists), FileContext is unsupported for the scheme —
